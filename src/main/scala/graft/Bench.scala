@@ -74,18 +74,27 @@ object Bench {
     // window, like clearCache: we measure the query, not the
     // teardown. Metadata-only memos (parquet schemas) are exempt by
     // not being registered.
+    // a query that throws in any rep is FAILED: it gets no timing, is
+    // named in both output records, and the run exits non-zero
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val samples = (1 to reps).flatMap { _ =>
-      names.map { name =>
+      names.flatMap { name =>
         val fn = SparkEntry.queries(name)
         Memos.resetAll()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            failed += name
+            false
+          }
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
-        name -> dt
+        if (ok) Some(name -> dt) else None
       }
     }
-    val results = names.map { name =>
+    val results = names.filterNot(failed).map { name =>
       val ts = samples.collect { case (`name`, t) => t }.sorted
       name -> ts(ts.length / 2)
     }.toMap
@@ -98,8 +107,9 @@ object Bench {
     val calibration = results.getOrElse("q_setops_all",
       if (results.nonEmpty) results.values.min else 0.0)
     def f3(v: Double): String = "%.3f".format(v)
+    val failedField = failed.map("\"" + _ + "\"").mkString("\"failed\":[", ",", "]")
     val envFields =
-      s""""loadavg":[${f3(loadStart)},${f3(loadEnd)}],"calibration_sec":${f3(calibration)}"""
+      s""""loadavg":[${f3(loadStart)},${f3(loadEnd)}],"calibration_sec":${f3(calibration)},$failedField"""
     // Full-precision per-query timings go to a sidecar file; the stdout
     // line is consumed from a bounded tail of the run log, so it must
     // stay under ~1800 chars: 3-decimal values, slowest queries first,
@@ -126,5 +136,9 @@ object Bench {
     val omitted = results.size - kept.length
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries_total":${results.size},"omitted":$omitted,"reps":$reps,"sf":"$sfDir",$envFields,"queries":${kept.mkString("{", ",", "}")}}""")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

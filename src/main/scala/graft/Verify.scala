@@ -33,6 +33,9 @@ object Verify {
     // SPARK_GRAFT_ONLY=q_a,q_b dumps just those queries (dev loop —
     // same switch Bench honors); the driver runs unfiltered
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // every query that throws is named on stderr and fails the run
+    // (after the remaining queries and the oracle file are written)
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -40,6 +43,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // queries are self-contained; dropping their unmanaged pipeline
       // caches (CacheScope scaladoc) between queries keeps the 67-query
@@ -62,5 +66,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

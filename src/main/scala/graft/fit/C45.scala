@@ -786,21 +786,99 @@ object C45 {
     }
   }
 
-  /** Driver-side split stats on the collected cells — the same
-    * factored identities as InfoStats (A4-A7 and the O2 boundary
-    * scan), summed in sorted (value, class) order so the floating-
-    * point result is independent of partitioning AND of scale
-    * (10× counts shift every term by the same log2(10)).
-    * ε special cases exactly as InfoStats.gainRatioD, but taking the
-    * (possibly known-fraction-scaled) gain as given: in unweighted
-    * mode gain == info - condE and this IS gainRatioD bit-for-bit. */
+  /** Dense ranks of strings: each key's rank among the distinct keys
+    * in Ordering.String order, and those distinct keys. */
+  private def rankStrings(keys: Array[String]): (Array[Int], Array[String]) = {
+    val idOf = new java.util.HashMap[String, Integer]
+    val firstSeen = Array.newBuilder[String]
+    val ids = keys.map { k =>
+      val id = idOf.get(k)
+      if (id != null) id.intValue
+      else { val n = idOf.size; idOf.put(k, n); firstSeen += k; n }
+    }
+    val distinct = firstSeen.result()
+    val byString = distinct.indices.sortBy(distinct(_))
+    val rankOfId = new Array[Int](distinct.length)
+    for (r <- byString.indices) rankOfId(byString(r)) = r
+    (ids.map(rankOfId(_)), byString.map(distinct(_)).toArray)
+  }
+
+  /** Dense ranks of ints (in numeric order), and the number of distinct
+    * keys. Keys spanning a range not much wider than their count — rule
+    * and attribute ids — rank by offset. */
+  private def rankInts(keys: Array[Int]): (Array[Int], Int) =
+    if (keys.isEmpty) (keys, 0)
+    else {
+      val lo = keys.min
+      val span = keys.max.toLong - lo + 1
+      if (span <= keys.length.toLong + 1024) (keys.map(_ - lo), span.toInt)
+      else {
+        val d = keys.clone()
+        java.util.Arrays.sort(d)
+        var u = 0
+        for (x <- d) if (u == 0 || d(u - 1) != x) { d(u) = x; u += 1 }
+        (keys.map(java.util.Arrays.binarySearch(d, 0, u, _)), u)
+      }
+    }
+
+  /** Stable counting sort of the positions `order` by `key(position)`,
+    * whose values lie in [0, range). */
+  private def countingSort(order: Array[Int], key: Array[Int], range: Int): Array[Int] = {
+    val next = new Array[Int](range + 1)
+    var i = 0
+    while (i < order.length) { next(key(order(i)) + 1) += 1; i += 1 }
+    var r = 0
+    while (r < range) { next(r + 1) += next(r); r += 1 }
+    val out = new Array[Int](order.length)
+    i = 0
+    while (i < order.length) {
+      val k = key(order(i))
+      out(next(k)) = order(i)
+      next(k) += 1
+      i += 1
+    }
+    out
+  }
+
+  /** Driver-side split stats on one level's collected cells — the
+    * same factored identities as InfoStats (A4-A7 and the O2 boundary
+    * scan). ε special cases exactly as InfoStats.gainRatioD, but taking
+    * the (possibly known-fraction-scaled) gain as given: in unweighted
+    * mode gain == info - condE and this IS gainRatioD bit-for-bit.
+    *
+    * Cost: O(cells · log cells) per level. Value and class strings are
+    * dictionary-encoded once (each distinct numeric value string parsed
+    * once), a stable radix sort on the integer codes puts the attribute
+    * cells in (rid, aid, value, class) order, and each (rid, aid) group
+    * is then one linear pass over primitive per-class arrays.
+    *
+    * Summation order — every floating-point sum runs in a fixed order,
+    * so the result is independent of partitioning and cell order, and
+    * of scale (10× counts shift every term by the same log2(10)):
+    *  - Σ plogp over classes (`sCls`) in class-string order;
+    *  - over categorical values (`sVal`) in value-string order;
+    *  - over cells (`sCell`) in (value, class)-string order;
+    *  - the numeric boundary scan visits values in `Double.compare`
+    *    order of the parsed value, with per-label sums in sorted-label
+    *    order, and its argmin keeps the first candidate under strict <.
+    * Numeric value strings that parse to equal doubles (`0.0`, `-0.0`)
+    * are one value with their counts added, taking the greater of them
+    * under `Double.compare` as its boundary — routing and
+    * [[deriveFinalCounts]] compare them as equal too. `catValues`
+    * lists each rule's values in value-string order, the order its
+    * child rids are assigned in. */
   private[fit] def levelStats(cells: Array[(Int, Int, String, String, Long)],
       schema: C45Schema, classLabels: Seq[String], fractional: Boolean,
       unit: Double, params: C45Params): LevelStats = {
-    val clsCounts: Map[Int, Map[String, Long]] = cells.iterator
-      .filter(_._2 == -1).toSeq
-      .groupBy(_._1)
-      .map { case (rid, cs) => rid -> cs.map(c => c._3 -> c._5).toMap }
+    // the aid = -1 sentinel slice carries (rid, cls, n); each rule's
+    // marginal map is built in cell order
+    val clsB = scala.collection.mutable.HashMap
+      .empty[Int, scala.collection.mutable.Builder[(String, Long), Map[String, Long]]]
+    cells.foreach { c =>
+      if (c._2 == -1) clsB.getOrElseUpdate(c._1, Map.newBuilder) += c._3 -> c._5
+    }
+    val clsCounts: Map[Int, Map[String, Long]] =
+      clsB.iterator.map { case (rid, b) => rid -> b.result() }.toMap
 
     def gainRatioOf(gain: Double, splitInfo: Double, info: Double): Double = {
       val tol = 1e-12
@@ -808,94 +886,194 @@ object C45 {
         if (math.abs(info) < tol) 0.0 else InfoStats.Epsilon
       } else gain / splitInfo
     }
+    // the attribute cells as columns in (rid, aid, value, class) order.
+    // Every key is dense-ranked once (strings in Ordering.String order);
+    // a numeric attribute's value key is instead its parsed value's rank
+    // in Double.compare order, where strings with == doubles (0.0,
+    // -0.0) share one rank. One stable LSD radix pass per key follows,
+    // so equal keys keep cell order.
+    val attr = cells.filter(_._2 != -1)
+    val m = attr.length
+    val isNum = schema.attrs.map(_.isNumeric).toArray
+    val (str0, values) = rankStrings(attr.map(_._3))
+    val (cls0, classes) = rankStrings(attr.map(_._4))
+    val (rid0, nRid) = rankInts(attr.map(_._1))
+    val (aid0, nAid) = rankInts(attr.map(_._2))
+    val numStr = new Array[Boolean](values.length)
+    for (k <- 0 until m) if (isNum(attr(k)._2)) numStr(str0(k)) = true
+    val parsed = new Array[Double](values.length)
+    val numStrs = values.indices.filter(numStr(_)).toArray
+    for (v <- numStrs) parsed(v) = values(v).toDouble
+    val numRank = new Array[Int](values.length)
+    val byValue = numStrs.sortBy(parsed(_))(Ordering.Double.TotalOrdering)
+    for (p <- 1 until byValue.length) {
+      val (a, b) = (byValue(p - 1), byValue(p))
+      numRank(b) = if (parsed(a) == parsed(b)) numRank(a) else numRank(a) + 1
+    }
+    val val0 = new Array[Int](m)
+    for (k <- 0 until m)
+      val0(k) = if (isNum(attr(k)._2)) numRank(str0(k)) else str0(k)
+    val order = Seq((cls0, classes.length), (val0, values.length),
+      (aid0, nAid), (rid0, nRid))
+      .foldLeft(Array.range(0, m)) { case (o, (key, range)) =>
+        countingSort(o, key, range) }
+    val rids, aids, vals, strs, clss = new Array[Int](m)
+    val ws = new Array[Long](m)
+    for (i <- 0 until m) {
+      val k = order(i)
+      rids(i) = attr(k)._1; aids(i) = attr(k)._2; ws(i) = attr(k)._5
+      vals(i) = val0(k); strs(i) = str0(k); clss(i) = cls0(k)
+    }
+    // `slots` maps a class to its sorted-label positions (a class
+    // outside the label set still counts toward n and sCls)
+    val labels = classLabels.sorted
+    val nl = labels.size
+    val slots = classes.map(c => labels.indices.filter(labels(_) == c).toArray)
+    val clsSum = new Array[Long](classes.length)
+    val clsSeen = new Array[Boolean](classes.length)
+
     val catStats = Map.newBuilder[(Int, Int), Cand]
     val catValues = Map.newBuilder[(Int, Int), Seq[(String, Long)]]
     val numStats = Map.newBuilder[(Int, Int), Cand]
-    cells.iterator.filter(_._2 != -1).toSeq
-      .groupBy(t => (t._1, t._2))
-      .toSeq.sortBy(_._1)
-      .foreach { case ((rid, aid), cs) =>
-        // nRaw: the rule's KNOWN mass on this attribute; totRaw: its
-        // full mass (sentinel slice). In fractional mode gain scales
-        // by the known fraction and splitInfo charges the unknown
-        // slice as an extra branch (Quinlan's unknown-value
-        // accounting); with no nulls the two are equal and every
-        // expression below reduces to the unweighted original.
-        val nRaw = cs.map(_._5).sum
-        val n = nRaw / unit
-        val totRaw = clsCounts.getOrElse(rid, Map.empty).values.sum
-        val nTot = totRaw / unit
-        val nUnknown = nTot - n
-        val sCls = cs.groupBy(_._4)
-          .map { case (c, g) => c -> g.map(_._5).sum }
-          .toSeq.sortBy(_._1).map(t => InfoStats.plogpD(t._2 / unit)).sum
-        val info = InfoStats.log2D(n) - sCls / n
-        if (!schema.isNumericAttr(aid)) {
-          val perVal = cs.groupBy(_._3).toSeq.sortBy(_._1)
-          val sVal = perVal.map { case (_, g) =>
-            InfoStats.plogpD(g.map(_._5).sum / unit) }.sum
-          val sCell = cs.sortBy(t => (t._3, t._4))
-            .map(t => InfoStats.plogpD(t._5 / unit)).sum
-          val splitInfo =
-            if (!fractional) InfoStats.log2D(n) - sVal / n
-            else InfoStats.log2D(nTot) -
-              (sVal + InfoStats.plogpD(nUnknown)) / nTot
-          val condE = (sVal - sCell) / n
-          val gain = if (fractional) (n / nTot) * (info - condE) else info - condE
-          catStats += (rid, aid) -> Cand(aid, gainRatioOf(gain, splitInfo, info),
-            gain, None)
-          catValues += (rid, aid) -> perVal.map { case (v, g) =>
-            v -> g.map(_._5).sum }
-        } else {
-          // boundary scan over sorted distinct values: cumulative
-          // class counts give the left contingency row at each
-          // candidate; the maximum value has no right side and the
-          // minDataRatio guard applies to both sides
-          // (MyReducer.java:140-141,188-190). Argmin on
-          // (cond_entropy, boundary), strict <. Counts stay exact
-          // longs (micros) through the cumulative scan.
-          val labels = classLabels.sorted
-          val byVal = cs.groupBy(_._3)
-            .map { case (v, g) =>
-              v.toDouble -> labels.map(c =>
-                g.filter(_._4 == c).map(_._5).sum)
-            }.toSeq.sortBy(_._1)
-          val tot = labels.indices.map(i => byVal.map(_._2(i)).sum)
-          val left = Array.fill(labels.size)(0L)
-          var leftN = 0L
-          var best: Option[(Double, Double)] = None // (condE, boundary)
-          byVal.foreach { case (v, rowCounts) =>
-            labels.indices.foreach(i => left(i) += rowCounts(i))
-            leftN += rowCounts.sum
-            val rightN = nRaw - leftN
-            if (rightN > 0 && leftN >= nRaw * params.minDataRatio &&
-                rightN >= nRaw * params.minDataRatio) {
-              val sLeft = labels.indices.map(i => InfoStats.plogpD(left(i) / unit)).sum
-              val sRight = labels.indices.map(i =>
-                InfoStats.plogpD((tot(i) - left(i)) / unit)).sum
-              val lN = leftN / unit
-              val rN = rightN / unit
-              val condE = ((lN * InfoStats.log2D(lN) - sLeft) +
-                (rN * InfoStats.log2D(rN) - sRight)) / n
-              if (best.forall(b => condE < b._1)) best = Some((condE, v))
+    var i = 0
+    while (i < ws.length) {
+      val rid = rids(i)
+      val aid = aids(i)
+      var j = i
+      java.util.Arrays.fill(clsSum, 0L)
+      java.util.Arrays.fill(clsSeen, false)
+      var nRaw = 0L
+      while (j < ws.length && rids(j) == rid && aids(j) == aid) {
+        nRaw += ws(j)
+        clsSum(clss(j)) += ws(j)
+        clsSeen(clss(j)) = true
+        j += 1
+      }
+      // nRaw: the rule's KNOWN mass on this attribute; totRaw: its
+      // full mass (sentinel slice). In fractional mode gain scales
+      // by the known fraction and splitInfo charges the unknown
+      // slice as an extra branch (Quinlan's unknown-value
+      // accounting); with no nulls the two are equal and every
+      // expression below reduces to the unweighted original.
+      val n = nRaw / unit
+      val totRaw = clsCounts.getOrElse(rid, Map.empty).values.sum
+      val nTot = totRaw / unit
+      val nUnknown = nTot - n
+      var sCls = 0.0
+      var c = 0
+      while (c < classes.length) {
+        if (clsSeen(c)) sCls += InfoStats.plogpD(clsSum(c) / unit)
+        c += 1
+      }
+      val info = InfoStats.log2D(n) - sCls / n
+      if (!isNum(aid)) {
+        val perVal = Vector.newBuilder[(String, Long)]
+        var sVal = 0.0
+        var sCell = 0.0
+        var k = i
+        while (k < j) {
+          val v = vals(k)
+          var vN = 0L
+          while (k < j && vals(k) == v) {
+            vN += ws(k)
+            sCell += InfoStats.plogpD(ws(k) / unit)
+            k += 1
+          }
+          sVal += InfoStats.plogpD(vN / unit)
+          perVal += values(v) -> vN
+        }
+        val splitInfo =
+          if (!fractional) InfoStats.log2D(n) - sVal / n
+          else InfoStats.log2D(nTot) -
+            (sVal + InfoStats.plogpD(nUnknown)) / nTot
+        val condE = (sVal - sCell) / n
+        val gain = if (fractional) (n / nTot) * (info - condE) else info - condE
+        catStats += (rid, aid) -> Cand(aid, gainRatioOf(gain, splitInfo, info),
+          gain, None)
+        catValues += (rid, aid) -> perVal.result()
+      } else {
+        // boundary scan over sorted distinct values: cumulative
+        // class counts give the left contingency row at each
+        // candidate; the maximum value has no right side and the
+        // minDataRatio guard applies to both sides
+        // (MyReducer.java:140-141,188-190). Argmin on
+        // (cond_entropy, boundary), strict <. Counts stay exact
+        // longs (micros) through the cumulative scan.
+        // one row of per-label counts per distinct value, in value order;
+        // == strings merged here take the last of them in Double.compare
+        // order
+        var nv = 0
+        var k = i
+        while (k < j) { if (k == i || vals(k) != vals(k - 1)) nv += 1; k += 1 }
+        val value = new Array[Double](nv)
+        val cnt = new Array[Long](nv * nl)
+        val rowN = new Array[Long](nv)
+        var v = -1
+        k = i
+        while (k < j) {
+          if (k == i || vals(k) != vals(k - 1)) { v += 1; value(v) = parsed(strs(k)) }
+          else if (java.lang.Double.compare(parsed(strs(k)), value(v)) > 0)
+            value(v) = parsed(strs(k))
+          slots(clss(k)).foreach { l => cnt(v * nl + l) += ws(k); rowN(v) += ws(k) }
+          k += 1
+        }
+        val tot = new Array[Long](nl)
+        v = 0
+        while (v < nv) {
+          var l = 0
+          while (l < nl) { tot(l) += cnt(v * nl + l); l += 1 }
+          v += 1
+        }
+        val left = new Array[Long](nl)
+        var leftN = 0L
+        var hasBest = false
+        var bestCondE = 0.0
+        var b = 0.0
+        v = 0
+        while (v < nv) {
+          var l = 0
+          while (l < nl) { left(l) += cnt(v * nl + l); l += 1 }
+          leftN += rowN(v)
+          val rightN = nRaw - leftN
+          if (rightN > 0 && leftN >= nRaw * params.minDataRatio &&
+              rightN >= nRaw * params.minDataRatio) {
+            var sLeft = 0.0
+            var sRight = 0.0
+            l = 0
+            while (l < nl) {
+              sLeft += InfoStats.plogpD(left(l) / unit)
+              sRight += InfoStats.plogpD((tot(l) - left(l)) / unit)
+              l += 1
+            }
+            val lN = leftN / unit
+            val rN = rightN / unit
+            val condE = ((lN * InfoStats.log2D(lN) - sLeft) +
+              (rN * InfoStats.log2D(rN) - sRight)) / n
+            if (!hasBest || condE < bestCondE) {
+              hasBest = true; bestCondE = condE; b = value(v)
             }
           }
-          best.foreach { case (condE, b) =>
-            val leftBN = byVal.takeWhile(_._1 <= b).map(_._2.sum).sum
-            val rightBN = nRaw - leftBN
-            val splitInfo =
-              if (!fractional) InfoStats.log2D(n) -
-                (InfoStats.plogpD(leftBN / unit) + InfoStats.plogpD(rightBN / unit)) / n
-              else InfoStats.log2D(nTot) -
-                (InfoStats.plogpD(leftBN / unit) + InfoStats.plogpD(rightBN / unit) +
-                  InfoStats.plogpD(nUnknown)) / nTot
-            val gain = if (fractional) (n / nTot) * (info - condE) else info - condE
-            numStats += (rid, aid) -> Cand(aid,
-              gainRatioOf(gain, splitInfo, info), gain, Some(b),
-              leftBN.toDouble / nRaw.toDouble)
-          }
+          v += 1
+        }
+        if (hasBest) {
+          var leftBN = 0L
+          v = 0
+          while (v < nv && value(v) <= b) { leftBN += rowN(v); v += 1 }
+          val rightBN = nRaw - leftBN
+          val splitInfo =
+            if (!fractional) InfoStats.log2D(n) -
+              (InfoStats.plogpD(leftBN / unit) + InfoStats.plogpD(rightBN / unit)) / n
+            else InfoStats.log2D(nTot) -
+              (InfoStats.plogpD(leftBN / unit) + InfoStats.plogpD(rightBN / unit) +
+                InfoStats.plogpD(nUnknown)) / nTot
+          val gain = if (fractional) (n / nTot) * (info - bestCondE) else info - bestCondE
+          numStats += (rid, aid) -> Cand(aid,
+            gainRatioOf(gain, splitInfo, info), gain, Some(b),
+            leftBN.toDouble / nRaw.toDouble)
         }
       }
+      i = j
+    }
     LevelStats(clsCounts, catStats.result(), catValues.result(), numStats.result())
   }
 
@@ -908,19 +1086,33 @@ object C45 {
     * class) → Σweight table that condition partitions — numeric
     * children by `value <= boundary` over the snapped value the
     * boundary scan itself ranked (raw `v <= b ⟺ snap(v) <= b`, the
-    * binning contract), categorical children by their exact value
-    * slice. Rows with a NULL split value appear in no slice and route
-    * to no child at serve time either — identical exclusion. Only the
-    * weight-rounding FRACTIONAL fan-out is non-derivable (per-row
-    * micro rounding happens at routing); fractional fits keep their
-    * final histogram. GoldenFitSpec/C45ForestSpec/C45BoostSpec pin
-    * bit-identity of the resulting models. */
+    * binning contract; a NaN value fails every `<=` and goes to the
+    * `>` child, as Spark's NaN-greatest routing sends it),
+    * categorical children by their exact value slice. Rows with a NULL
+    * split value appear in no slice and route to no child at serve
+    * time either — identical exclusion. Only the weight-rounding
+    * FRACTIONAL fan-out is non-derivable (per-row micro rounding
+    * happens at routing); fractional fits keep their final histogram.
+    * GoldenFitSpec/C45ForestSpec/C45BoostSpec pin bit-identity of the
+    * resulting models.
+    *
+    * Cost: O(cells + routes) — the routes' (parent rid, split attr)
+    * slices are indexed in one pass over the cells, and each slice is
+    * read by its one route. The sums are exact longs, so their order
+    * does not matter; each child's map is built from its slice in cell
+    * order. */
   private[fit] def deriveFinalCounts(
       cells: Array[(Int, Int, String, String, Long)],
       routes: Seq[Route]): Map[Int, Map[String, Long]] = {
+    def key(rid: Int, aid: Int): Long = (rid.toLong << 32) | (aid & 0xffffffffL)
+    val slices = scala.collection.mutable.HashMap.empty[Long,
+      scala.collection.mutable.ArrayBuffer[(Int, Int, String, String, Long)]]
+    routes.foreach(rt => slices(key(rt.prid, rt.aid)) =
+      scala.collection.mutable.ArrayBuffer.empty)
+    cells.foreach(c => slices.get(key(c._1, c._2)).foreach(_ += c))
     val out = Map.newBuilder[Int, Map[String, Long]]
     routes.foreach { rt =>
-      val slice = cells.filter(c => c._1 == rt.prid && c._2 == rt.aid)
+      val slice = slices(key(rt.prid, rt.aid))
       if (rt.kind == "num") {
         val le = scala.collection.mutable.Map.empty[String, Long]
           .withDefaultValue(0L)
@@ -931,10 +1123,14 @@ object C45 {
         }
         if (le.nonEmpty) out += rt.lrid -> le.toMap
         if (gt.nonEmpty) out += rt.rrid -> gt.toMap
-      } else rt.children.foreach { case (v, crid) =>
-        val m = slice.iterator.filter(_._3 == v).toSeq.groupBy(_._4)
-          .map { case (c, g) => c -> g.map(_._5).sum }
-        if (m.nonEmpty) out += crid -> m
+      } else {
+        val byValue = slice.groupBy(_._3)
+        rt.children.foreach { case (v, crid) =>
+          byValue.get(v).foreach { g =>
+            out += crid -> g.toList.groupBy(_._4)
+              .map { case (c, cg) => c -> cg.map(_._5).sum }
+          }
+        }
       }
     }
     out.result()
@@ -944,7 +1140,12 @@ object C45 {
     * same pass records each split as a Route row so the next level
     * can broadcast-join its way to child rids if its frontier is
     * deep (child rid = position in nextOpen, by construction the
-    * index the flat CASE WHEN would assign too). */
+    * index the flat CASE WHEN would assign too).
+    *
+    * Cost: O(rules + candidates) — the candidates are grouped by rule
+    * once per level. Each rule takes the maximum of
+    * (gainRatio, -aid), which has no ties within a rule, so the choice
+    * does not depend on iteration order. */
   private[fit] def decideLevel(open: Vector[Rule], level: Int, st: LevelStats,
       schema: C45Schema, params: C45Params, classLabels: Seq[String],
       fractional: Boolean, unit: Double,
@@ -956,6 +1157,8 @@ object C45 {
     val imp = Seq.newBuilder[(Int, Double)]
     var globalMajority = globalMajority0
     var nextIdx = 0
+    val candsByRid: Map[Int, Seq[Cand]] =
+      (st.cat.toSeq ++ st.num.toSeq).groupMap(_._1._1)(_._2)
     open.zipWithIndex.foreach { case (rule, rid) =>
       val counts = st.clsCounts.getOrElse(rid, Map.empty)
       if (counts.isEmpty) {
@@ -968,11 +1171,10 @@ object C45 {
         if (globalMajority.isEmpty && rid == 0 && level == 0)
           globalMajority = Some(majority)
         val pure = counts.size == 1
-        val cands = (st.cat ++ st.num).collect {
-          case ((r, aid), c)
-            if r == rid && !rule.usedAttrs.contains(aid) &&
-              c.gain > 1e-12 && c.gainRatio > InfoStats.Epsilon => c
-        }
+        val used = rule.usedAttrs
+        val cands = candsByRid.getOrElse(rid, Nil).filter(c =>
+          !used.contains(c.aid) &&
+            c.gain > 1e-12 && c.gainRatio > InfoStats.Epsilon)
         if (pure || cands.isEmpty || rule.depth >= params.maxDepth) {
           closedAdd += ((rule.closed(majority),
             if (fractional) counts.values.sum else counts.values.sum * 1000000L,

@@ -13,7 +13,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * array, codegen'd: O(log maxBins) compares per row instead of the
   * O(maxBins) per-row lambda filter a higher-order-function
   * formulation would cost. Snapping preserves split semantics exactly:
-  * snap(v) <= e ⟺ v <= e for every edge e. */
+  * snap(v) <= e ⟺ v <= e for every edge e. NaN passes through
+  * unchanged: Spark orders it above every value, so routing and
+  * serving send it to the `>` side of any boundary, and the binned
+  * histogram must carry it as NaN (as the unbinned one does), not as
+  * the lowest edge. */
 case class SortedCeilSnap(child: Expression, edges: Array[Double])
   extends UnaryExpression {
 
@@ -22,7 +26,7 @@ case class SortedCeilSnap(child: Expression, edges: Array[Double])
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_snap"
 
-  private def snap(v: Double): Double = {
+  private def snap(v: Double): Double = if (v.isNaN) v else {
     var lo = 0
     var hi = edges.length
     while (lo < hi) {
@@ -41,12 +45,16 @@ case class SortedCeilSnap(child: Expression, edges: Array[Double])
       val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
       val mid = ctx.freshName("mid")
       s"""
-         |int $lo = 0; int $hi = $e.length;
-         |while ($lo < $hi) {
-         |  int $mid = ($lo + $hi) >>> 1;
-         |  if ($e[$mid] < $v) { $lo = $mid + 1; } else { $hi = $mid; }
+         |if (Double.isNaN($v)) {
+         |  ${ev.value} = $v;
+         |} else {
+         |  int $lo = 0; int $hi = $e.length;
+         |  while ($lo < $hi) {
+         |    int $mid = ($lo + $hi) >>> 1;
+         |    if ($e[$mid] < $v) { $lo = $mid + 1; } else { $hi = $mid; }
+         |  }
+         |  ${ev.value} = ($lo == $e.length) ? Double.POSITIVE_INFINITY : $e[$lo];
          |}
-         |${ev.value} = ($lo == $e.length) ? Double.POSITIVE_INFINITY : $e[$lo];
        """.stripMargin
     })
 

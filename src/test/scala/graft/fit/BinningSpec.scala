@@ -64,4 +64,32 @@ class BinningSpec extends AnyFunSuite {
       .reduce(_ + _)
     assert(df.withColumn("m", nMatches).filter(col("m") =!= 1).count() == 0)
   }
+
+  test("NaN under binning: the derived final level's leafDist equals the " +
+      "per-leaf counts transform routes") {
+    val s = spark
+    import s.implicits._
+    // x carries the root split; y (binned, 10% NaN) splits the x < 100
+    // side at level 1, so its children are the derived final level
+    val nanDf = (0 until 2000).map { i =>
+      val x = (i % 200).toDouble
+      val y = if (i % 10 == 3) Double.NaN else ((i * 7) % 200).toDouble
+      (x, y, if (x < 100 && y < 150) "a" else "b")
+    }.toDF("x", "y", "cls")
+    val m = C45.fit(nanDf, C45Schema.fromDataFrame(nanDf, "cls"),
+      C45Params(maxBins = 16, maxDepth = 2, missingMode = "drop"))
+    assert(m.leaves.exists(l => l.depth == 2 && l.conditions.exists(_._1 == 1)),
+      m.ruleStrings)
+    // score with each leaf labelled by its index: transform's own routing
+    val byLeaf = m.copy(majority = "none",
+      leaves = m.leaves.zipWithIndex.map { case (r, i) => r.closed(i.toString) })
+    val routed = byLeaf.transform(nanDf, "leaf").groupBy("leaf", "cls").count()
+      .collect().groupBy(_.getString(0)).map { case (leaf, rs) =>
+        leaf -> rs.map(r => r.getString(1) -> r.getLong(2) * 1000000L).toMap
+      }
+    m.leaves.indices.foreach { i =>
+      assert(m.leafDist(i) == routed.getOrElse(i.toString, Map.empty),
+        s"leaf ${m.leaves(i).encode}")
+    }
+  }
 }

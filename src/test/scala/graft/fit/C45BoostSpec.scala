@@ -44,6 +44,44 @@ class C45BoostSpec extends AnyFunSuite {
     assert(b.trees.nonEmpty && b.trees.size <= 4)
   }
 
+  test("a round that throws frees every boost cache, the previous " +
+      "round's included") {
+    import org.apache.spark.sql.execution.SparkStrategy
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val weightCaches = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    // fails the planning of the first query over a SECOND weight cache —
+    // round 1's first histogram job, while round 0's cache still waits
+    // to be freed
+    object FailRoundOne extends SparkStrategy {
+      def apply(plan: LogicalPlan): Seq[SparkPlan] = {
+        plan.foreach {
+          case r: InMemoryRelation if r.output.exists(_.name == "__w") =>
+            weightCaches.synchronized {
+              weightCaches.add(r.cacheBuilder)
+              if (weightCaches.size > 1)
+                throw new IllegalStateException("injected round-1 failure")
+            }
+          case _ =>
+        }
+        Nil
+      }
+    }
+    val df = fixture
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val prev = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = prev :+ FailRoundOne
+    val e =
+      try intercept[Exception](C45Boost.fit(df, schema, params))
+      finally spark.experimental.extraStrategies = prev
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "injected round-1 failure"), e)
+    assert(weightCaches.size == 2)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
   test("the Σ-preserving M1 reweight holds total mass to per-row " +
     "rounding (independent replay of round 0)") {
     val df = fixture

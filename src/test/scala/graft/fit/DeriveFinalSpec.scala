@@ -59,6 +59,9 @@ class DeriveFinalSpec extends AnyFunSuite {
         finally {
           spark.conf.set("spark.sql.adaptive.enabled", aqe)
           spark.sparkContext.clearJobGroup()
+          // events arrive asynchronously: deliver every queued one before
+          // the count is read and the listener goes away
+          org.apache.spark.graft.TestBus.drain(spark.sparkContext)
           spark.sparkContext.removeSparkListener(l)
         }
       // the frontier must actually reach maxDepth for the claim to bite

@@ -173,4 +173,23 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(r.getDouble(0) == 11.0)
     assert(r.getLong(1) == 1L)
   }
+
+  test("SortedCeilSnap passes NaN through, interpreted and codegen'd") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.types.DoubleType
+    val snap = SortedCeilSnap(BoundReference(0, DoubleType, nullable = true),
+      Array(1.0, 2.0, 4.0))
+    val generated = GenerateMutableProjection.generate(Seq(snap))
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    Seq(Double.NaN -> Double.NaN, 0.5 -> 1.0, 2.0 -> 2.0, 3.0 -> 4.0,
+      9.0 -> Double.PositiveInfinity, Double.NegativeInfinity -> 1.0,
+      Double.PositiveInfinity -> Double.PositiveInfinity).foreach {
+      case (v, want) =>
+        val row = InternalRow(v)
+        assert(bits(snap.eval(row).asInstanceOf[Double]) == bits(want), s"eval($v)")
+        assert(bits(generated(row).getDouble(0)) == bits(want), s"codegen($v)")
+    }
+  }
 }
