@@ -5,18 +5,33 @@ import graft.model.{CatEq, NumGT, NumLE, Rule, Split}
 import graft.stats.InfoStats
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-/** Tuning knobs for [[C45.fit]]. `minDataRatio` is the reference's 10%
-  * both-sides guard on numeric boundaries (MyReducer.java:34,188-190);
+/** Tuning knobs for [[C45.fit]].
+  *
+  * `minDataRatio` is the reference's 10% both-sides guard on numeric
+  * boundaries (MyReducer.java:34,188-190).
+  *
   * `maxDepth` bounds the level loop (the reference's only bound is
-  * attribute exhaustion). `maxBins` caps candidate boundaries per
-  * numeric attribute: attributes with more distinct values are
-  * quantile-discretized once up front (MLlib-style), keeping the
-  * per-(rule,attr) window in the split search bounded at any data
-  * scale — the reference instead buffers and rescans EVERY distinct
-  * value inside one reducer (MyReducer.java:112-205). 0 disables. */
-/** `missingMode` governs null ATTRIBUTE values (null class labels are
+  * attribute exhaustion).
+  *
+  * `maxBins` caps candidate boundaries per numeric attribute: attributes
+  * with more distinct values are quantile-discretized once up front
+  * (MLlib-style), keeping the per-(rule,attr) window in the split search
+  * bounded at any data scale — the reference instead buffers and
+  * rescans EVERY distinct value inside one reducer
+  * (MyReducer.java:112-205). 0 disables.
+  *
+  * `routeJoinThreshold`: frontiers wider than this route rows through a
+  * broadcast rule-table join instead of one flat CASE WHEN. The two
+  * paths produce identical trees (spec-pinned); the trade is
+  * whole-stage-codegen compile time of an O(rules × depth) expression
+  * (grows every level, compiled fresh each level) against a join +
+  * routed-base persist (constant-size expression, one compiled shape
+  * reused). Measured at sf0.1: a 22-rule flat level costs ~2.3s vs
+  * ~1.4s join-routed while ≤12-rule levels favor flat — the crossover
+  * sits under 20 rules, hence 16.
+  *
+  * `missingMode` governs null ATTRIBUTE values (null class labels are
   * always rejected): "fractional" (default) is canonical C4.5 — a null
   * row's weight is split across the children of its rule's split in
   * proportion to observed branch mass, gains are scaled by the known
@@ -26,15 +41,6 @@ import org.apache.spark.storage.StorageLevel
   * once their path splits on the null attribute — the closest a
   * no-NPE engine gets to the reference, which crashes). Corpora with
   * no nulls take a byte-identical code path either way. */
-/** `routeJoinThreshold`: frontiers wider than this route rows through
-  * a broadcast rule-table join instead of one flat CASE WHEN. The two
-  * paths produce identical trees (spec-pinned); the trade is
-  * whole-stage-codegen compile time of an O(rules × depth) expression
-  * (grows every level, compiled fresh each level) against a join +
-  * routed-base persist (constant-size expression, one compiled shape
-  * reused). Measured at sf0.1: a 22-rule flat level costs ~2.3s vs
-  * ~1.4s join-routed while ≤12-rule levels favor flat — the crossover
-  * sits under 20 rules, hence 16. */
 case class C45Params(minDataRatio: Double = InfoStats.DefaultMinDataRatio,
                      maxDepth: Int = 30,
                      maxBins: Int = 256,
@@ -137,38 +143,10 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     levels.foreach { routes =>
       val routeDf = routes.toDF(
         "__prid", "__kind", "__aid", "__boundary", "__lrid", "__rrid", "__children")
-      val routeAids = routes.filter(_.kind != "leaf").map(_.aid).toSet
-      val routeNum = schema.numericAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-      val routeCat = schema.categoricalAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-      val numBranch =
-        if (routeNum.isEmpty) None
-        else {
-          val numv = map(routeNum.flatMap(a =>
-            Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("double"))): _*)
-          Some(when(col("__kind") === "num",
-            when(element_at(numv, col("__aid")) <= col("__boundary"), col("__lrid"))
-              .when(element_at(numv, col("__aid")) > col("__boundary"), col("__rrid"))))
-        }
-      val catBranchOf: Column => Column = prev => {
-        val catv = map(routeCat.flatMap(a =>
-          Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("string"))): _*)
-        val hit = element_at(col("__children"), element_at(catv, col("__aid")))
-        if (prev == null) when(col("__kind") === "cat", hit)
-        else prev.when(col("__kind") === "cat", hit)
-      }
-      val core = (numBranch, routeCat.isEmpty) match {
-        case (Some(nb), true)  => nb
-        case (Some(nb), false) => catBranchOf(nb)
-        case (None, false)     => catBranchOf(null)
-        case (None, true)      => null // leaf-only level: cannot occur below maxD
-      }
-      val routedRid =
-        if (core == null) when(col("__kind") === "leaf", col("__prid"))
-        else core.when(col("__kind") === "leaf", col("__prid"))
       // LEFT join: a row whose nid went null (null/unseen value at an
       // earlier level) rides through unrouted and lands on majority
       cur = cur.join(broadcast(routeDf), cur("__nid") === routeDf("__prid"), "left")
-        .withColumn("__nidN", routedRid)
+        .withColumn("__nidN", C45.routedRid(routes, schema))
         .drop("__nid", "__prid", "__kind", "__aid", "__boundary",
           "__lrid", "__rrid", "__children")
         .withColumnRenamed("__nidN", "__nid")
@@ -651,26 +629,6 @@ object C45Model {
   }
 }
 
-/** Level-wise C4.5 fit (SURVEY.md O4): the reference's one-MapReduce-job-
-  * per-tree-level driver loop (Main.java:59-123) over a persisted
-  * DataFrame. Per level, ALL open rules are scored simultaneously: rules
-  * at one level have mutually disjoint predicates, so a single flat
-  * CASE WHEN assigns each row its rule id, and one shuffled aggregation
-  * per attribute kind scores every (rule, attribute) pair — replacing
-  * the reference's rule-queue HDFS files, distributed-cache side input
-  * and combiner-less raw-pair shuffle (SURVEY.md §3.4, §4).
-  *
-  * Semantics choices vs the reference (SURVEY.md §2 quirks, all chosen
-  * "correct", regression-documented in C45QuirksSpec):
-  *  #1 numeric boundaries compare as typed doubles, never truncated
-  *     strings; #2 leaves take the majority class, not last-seen;
-  *  #3 boundaries are per (rule, attr), no cross-rule contamination;
-  *  #4 rules with no positive-gain candidate close as majority leaves
-  *     instead of silently dropping their rows; #5 an attribute is used
-  *     at most once per path (replicated — it defines tree shape);
-  *  #6 the ε=1e-5 splitInfo==0 case never wins (a zero-gain "split"
-  *     replays the same node), so such rules close as majority leaves.
-  */
 /** One row of the broadcast routing table for deep frontiers: how a
   * PARENT rule (by its rid at the previous level) routes its rows to
   * child rids at this level. `kind` = "num" (boundary + left/right
@@ -713,9 +671,9 @@ object C45 {
 
   /** Driver-side statistics of one level, derived from one histogram
     * collect: the per-rule class marginals plus per-(rule, attr) split
-    * candidates. Extracted from the fit loop so the fused k-fold fit
-    * ([[fitFolds]]) replays the exact same math on its per-fold cell
-    * slices — bit-identical decisions by construction. */
+    * candidates. Every fit [[LevelLoop.grow]] grows replays the exact
+    * same math on its own cell slice — bit-identical decisions by
+    * construction. */
   private[fit] case class LevelStats(
       clsCounts: Map[Int, Map[String, Long]],
       cat: Map[(Int, Int), Cand],
@@ -736,8 +694,8 @@ object C45 {
 
   /** The flat frontier-routing expression: first-match CASE WHEN over
     * the open rules' root-to-leaf conjunctions, -1 = no rule (row
-    * leaves the fit). Shared by [[fit]]'s small-frontier path and the
-    * fused fold fit so rid assignment is identical by construction. */
+    * leaves the fit). The rid of a rule is its frontier index — the
+    * same id the join-routed and RouteX-chained levels assign. */
   private[fit] def flatRidColumn(open: Vector[Rule], names: Seq[String]): Column = {
     val first = when(open.head.toPredicate(names), 0)
     open.zipWithIndex.tail.foldLeft(first) { case (acc, (r, i)) =>
@@ -745,16 +703,46 @@ object C45 {
     }.otherwise(lit(-1))
   }
 
+  /** The child id a broadcast [[Route]] join assigns each row, over
+    * the join's output columns: a numeric route sends `value <=
+    * boundary` to `__lrid` and `>` to `__rrid`, a categorical route
+    * looks the value up in `__children`, and a "leaf" self-loop (the
+    * serving level-walk) keeps `__prid`. A NULL or unseen value yields
+    * null — the row routes nowhere, the fate the flat CASE WHEN's -1
+    * gives it. Raw (un-snapped) values compare exactly as
+    * [[graft.model.Rule.toPredicate]] does. A branch exists only when
+    * some route needs it, so a categorical-only schema builds no
+    * numeric map. Shared by the fit's join-routed levels and
+    * [[C45Model]]'s level-walk. */
+  private[fit] def routedRid(routes: Seq[Route], schema: C45Schema): Column = {
+    val aids = routes.filter(_.kind != "leaf").map(_.aid).toSet
+    def valueAt(attrs: Seq[graft.meta.AttrMeta], to: String): Option[Column] = {
+      val used = attrs.filter(a => aids(schema.attrIndex(a.name)))
+      if (used.isEmpty) None
+      else Some(element_at(map(used.flatMap(a =>
+        Seq(lit(schema.attrIndex(a.name)), col(a.name).cast(to))): _*), col("__aid")))
+    }
+    val branches =
+      valueAt(schema.numericAttrs, "double").map(v => (col("__kind") === "num",
+        when(v <= col("__boundary"), col("__lrid"))
+          .when(v > col("__boundary"), col("__rrid")))).toSeq ++
+      valueAt(schema.categoricalAttrs, "string").map(v => (col("__kind") === "cat",
+        element_at(col("__children"), v))) ++
+      (if (routes.exists(_.kind == "leaf")) Seq((col("__kind") === "leaf", col("__prid")))
+       else Nil)
+    branches match {
+      case Seq() => lit(null)
+      case (c, v) +: rest => rest.foldLeft(when(c, v)) { case (acc, (ci, vi)) => acc.when(ci, vi) }
+    }
+  }
+
   /** The fractional route-weight expression over a RouteX join's
     * output columns (__w, __frac, __kind, __aid, __boundary, __side,
     * __catval, plus the row's live attribute values): full weight
     * where the value selects this child, frac-rounded micros on EVERY
-    * child where the value is NULL, null (row leaves) otherwise. ONE
-    * builder shared by [[fit]]'s sequential fan-out and [[fitFolds]]'
-    * fused fold fan-out, so the rounding/branch semantics can never
-    * diverge between the two paths whose bit-identity CrossValSpec
-    * pins. Rounding to whole micros keeps downstream sums exact
-    * integers; a weight rounding to 0 is dropped by the caller. */
+    * child where the value is NULL, null (row leaves) otherwise.
+    * Rounding to whole micros keeps downstream sums exact integers; a
+    * weight rounding to 0 is dropped by the caller. */
   private[fit] def routeXWeight(routeNum: Seq[graft.meta.AttrMeta],
       routeCat: Seq[graft.meta.AttrMeta], schema: C45Schema): Column = {
     val fracW = floor(col("__w") * col("__frac") + lit(0.5)).cast("long")
@@ -1233,25 +1221,6 @@ object C45 {
           params: C45Params = C45Params()): C45Model =
     fitWithImportance(df, schema, params)._1
 
-  /** Persist WITHOUT columnar compression — for the level loop's
-    * transient routed bases, which live for exactly one level and are
-    * scanned exactly twice (this level's histogram, the next level's
-    * route join). Dictionary/RLE encoding buys memory at CPU cost on
-    * both the build and every scan; for a frame that short-lived it is
-    * a net loss (~25% of a join-routed fit at 600k rows). Memory stays
-    * bounded: at most one level's base is cached at a time, and
-    * MEMORY_AND_DISK spills rather than evicts under pressure. The
-    * conf is snapshotted by the InMemoryRelation at persist time, so
-    * the temporary set/restore cannot leak to caller caches. */
-  private[fit] def persistUncompressed(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val key = "spark.sql.inMemoryColumnarStorage.compressed"
-    val old = s.conf.get(key)
-    s.conf.set(key, "false")
-    try df.persist(StorageLevel.MEMORY_AND_DISK)
-    finally s.conf.set(key, old)
-  }
-
   /** Is the WHOLE input cache-backed — i.e. does the plan root reach an
     * InMemoryRelation through nothing but row-preserving wrappers
     * (Project/Filter/aliases)? An InMemoryRelation merely somewhere in
@@ -1277,798 +1246,88 @@ object C45 {
     * entirely from the driver-side selection pass (zero extra jobs);
     * deterministic because every gain is derived from the sorted
     * histogram in a fixed order. Attributes never chosen are absent
-    * from the map. */
+    * from the map.
+    *
+    * One up-front probe job checks the labels, finds whether any
+    * attribute value is NULL and gates binning; then [[LevelLoop.grow]]
+    * grows one fit. A null-bearing corpus under missingMode
+    * "fractional" grows in exact micros with fan-out on, so only its
+    * null-bearing rows ride the weighted RouteX chain. */
   def fitWithImportance(df: DataFrame, schema: C45Schema,
-                        params: C45Params = C45Params()): (C45Model, Map[Int, Double]) = {
-    val spark = df.sparkSession
-    val names = schema.attrNames
-    val clsCol = schema.classCol
-    val catAttrs = schema.categoricalAttrs
-    val numAttrs = schema.numericAttrs
-    // callers that already persisted the input (cross-validation fits
-    // k models over one stamped cache; prune/simplify re-scan the
-    // training frame after the fit) keep THEIR cache: re-persisting
-    // the projection would materialize the ~same bytes again per fit.
-    // The level loop then reads through the caller's cache — the
-    // projection on top is free at scan time. Detection looks through
-    // plan wrappers (a filter-of-cached reports storageLevel NONE, but
-    // its resolved plan substitutes the InMemoryRelation).
-    val prePersisted = df.storageLevel != StorageLevel.NONE ||
-      inputCacheBacked(df)
-    val data = {
-      val proj = df.select((names :+ clsCol).map(col): _*)
-      // widen a narrow-source projection to the session parallelism
-      // before caching: the level loop re-scans this cache once per
-      // level, and a 1-3-partition cache (one small parquet file)
-      // would run every histogram on 1-3 cores (Widen scaladoc)
-      if (prePersisted) proj
-      else graft.operators.Widen.toParallelism(proj)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+                        params: C45Params = C45Params()): (C45Model, Map[Int, Double]) =
+    LevelLoop.cached(df, (schema.attrNames :+ schema.classCol).map(col)) { data =>
+      val probe = LevelLoop.probe(data, schema, params.maxBins)
+        .requireLabels("C45.fit", schema.classCol)
+      val fractional = params.missingMode == "fractional" &&
+        schema.attrNames.nonEmpty && probe.nullAttrRows > 0L
+      val group = FitGroup(LevelLoop.classLabels(data, schema),
+        LevelLoop.binEdges(data, schema, params.maxBins, a => probe.distinct((0, a))))
+      LevelLoop.grow(data, schema, params, Vector(group), "graft.fit",
+        weight = lit(if (fractional) 1000000L else 1L), micros = fractional,
+        fanOut = fractional).head
     }
-    try {
-
-    // contract: class labels must be non-null (the reference NPEs on a
-    // null label, Main.java routing; here a null would silently vanish
-    // from the sentinel class-count slice while its row still feeds
-    // per-attribute split stats — an inconsistent n). Fail loudly up
-    // front instead — one limit-1 job against the just-persisted data.
-    // ALL up-front probes in ONE agg job over the just-persisted
-    // projection (the common null-free corpus previously paid two full
-    // scans: a filter().isEmpty probe only short-circuits when nulls
-    // EXIST): the class-label check, whether null attribute values
-    // occur at all — the fractional-weight machinery engages only when
-    // they do, so a null-free corpus takes the original count-based
-    // path byte-for-byte (identical float arithmetic, identical
-    // goldens) and pays nothing for the capability — and the binning
-    // gate's per-numeric-attr approx-distinct sketches (previously a
-    // second full scan; the same fusion fitFolds already does), so
-    // the cache-building scan carries everything the level loop needs
-    // short of the approxQuantile edges themselves.
-    val dcAggs =
-      if (params.maxBins <= 0) Seq.empty
-      else numAttrs.map(a =>
-        approx_count_distinct(col(a.name)).as(s"__dc_${a.name}"))
-    val probeAggs = Seq(
-      count(when(col(clsCol).isNull, 1)).as("cls"),
-      count(when(names.map(col(_).isNull).reduceOption(_ || _)
-        .getOrElse(lit(false)), 1)).as("attr")) ++ dcAggs
-    val nullProbe = data.agg(probeAggs.head, probeAggs.tail: _*).head()
-    require(nullProbe.getLong(0) == 0L,
-      s"C45.fit requires non-null class labels: column '$clsCol' contains NULLs")
-    val fractional = params.missingMode == "fractional" && names.nonEmpty &&
-      nullProbe.getLong(1) > 0L
-    // the level loop below is always UNWEIGHTED (fractional mode
-    // delegates just past the label discovery): histogram cells are
-    // plain row counts and c/unit == c.toDouble
-    val unit = 1.0
-
-    // closed class-label set: declared, else discovered once (the
-    // reference requires the declared set, Main.java:154-158)
-    val classLabels: Seq[String] =
-      if (schema.classLabels.nonEmpty) schema.classLabels
-      else data.select(col(clsCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-
-    // FRACTIONAL mode delegates to the fused fold machinery at k = 1
-    // (fold stamp -1 → every row trains the single fit): decisions are
-    // bit-identical by the shared-math construction CrossValSpec pins
-    // (fitFolds ≡ sequential fractional fits), and the weighted RouteX
-    // chain then carries ONLY null-bearing rows (fitFolds' CLEAN/DIRTY
-    // split) — the sequential all-rows fan-out this replaces persisted
-    // and re-joined rows×1 per join-routed level regardless of the
-    // null rate, where the fused path persists dirty×1 and routes the
-    // null-free majority through the flat rid CASE over this cache.
-    // The probe's approx-distinct sketches ride along so the binning
-    // gate never re-scans.
-    if (fractional) {
-      val imp = Array.fill(1)(
-        scala.collection.mutable.Map.empty[Int, Double].withDefaultValue(0.0))
-      val dc =
-        if (params.maxBins <= 0 || numAttrs.isEmpty) None
-        else Some(numAttrs.map(a =>
-          (0, a.name) -> nullProbe.getAs[Long](s"__dc_${a.name}")).toMap)
-      val models = fitFolds(data.withColumn("__fold", lit(-1)), "__fold", 1,
-        schema.copy(classLabels = classLabels), params, dc,
-        fractional = true, importanceOut = imp)
-      return (models.head, imp(0).toMap)
-    }
-
-    // explode(map(aid -> value)) = the F2 candidate emission, one row
-    // per (record, candidate attr), typed per attribute kind
-    def attrPairs(attrs: Seq[graft.meta.AttrMeta], castTo: String): Seq[Column] =
-      attrs.flatMap(a =>
-        Seq(lit(schema.attrIndex(a.name)), col(a.name).cast(castTo)))
-
-    // quantile-bin high-cardinality numeric attributes ONCE (maxBins):
-    // the probe's approx-distinct sketches decide which attrs need it,
-    // one approxQuantile job produces the edges; values then snap to
-    // the smallest edge >= v via a codegen'd binary search, which
-    // preserves split semantics exactly (snap(v) <= e ⟺ v <= e for
-    // any edge e)
-    val binEdges: Map[Int, Array[Double]] =
-      if (params.maxBins <= 0 || numAttrs.isEmpty) Map.empty
-      else {
-        val need = numAttrs.filter(a =>
-          nullProbe.getAs[Long](s"__dc_${a.name}") > params.maxBins)
-        if (need.isEmpty) Map.empty
-        else {
-          val probs = (1 until params.maxBins).map(_.toDouble / params.maxBins).toArray
-          val qs = data.stat.approxQuantile(need.map(_.name).toArray, probs, 1e-4)
-          need.map(_.name).zip(qs).collect {
-            case (nm, edges) if edges.nonEmpty =>
-              schema.attrIndex(nm) -> edges.distinct.sorted
-          }.toMap
-        }
-      }
-    def numValCol(a: graft.meta.AttrMeta): Column = {
-      val raw = col(a.name).cast("double")
-      binEdges.get(schema.attrIndex(a.name))
-        .map(e => graft.functions.SortedCeilSnap.snapTo(e, raw))
-        .getOrElse(raw)
-    }
-    var open = Vector(Rule.root)
-    var closed = Vector.empty[Rule]
-    // per-leaf training mass in exact micros, aligned with `closed` —
-    // the branch-share denominators transformFractional scores with
-    var closedMass = Vector.empty[Long]
-    // per-leaf class distribution in exact micros, aligned with
-    // `closed` — transformProba's per-leaf probability numerators
-    var closedDist = Vector.empty[Map[String, Long]]
-    val attrImportance = scala.collection.mutable.Map.empty[Int, Double]
-      .withDefaultValue(0.0)
-    var globalMajority: Option[String] = None
-    var level = 0
-    // per-level wall-clock diagnostics: -Dgraft.fit.profile=1 (or env
-    // GRAFT_FIT_PROFILE=1 through a forked runner, as fitFolds accepts)
-    val profile = sys.props.get("graft.fit.profile").contains("1") ||
-      sys.env.get("GRAFT_FIT_PROFILE").contains("1")
-    // deep-frontier routing state: the previous level's routed base,
-    // the routes its decisions produced, and the persisted handle to
-    // free once the next level has materialized on top of it
-    var prevBase: DataFrame = null
-    var pendingRoutes: Seq[Route] = Nil
-    // the previous level's collected cells: at level == maxDepth every
-    // open rule closes on its class marginal alone, which these cells
-    // derive exactly (deriveFinalCounts) — the final histogram job is
-    // skipped outright
-    var prevCells: Array[(Int, Int, String, String, Long)] = null
-    var prevPersisted: Option[DataFrame] = None
-    // every join-routed base ever persisted; unpersist is idempotent,
-    // so the finally can sweep the whole list even though each level
-    // already frees its predecessor eagerly — this covers the level
-    // whose stat jobs threw before it became prevPersisted
-    val routedPersists = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-
-    while (open.nonEmpty && level <= params.maxDepth) {
-      if (level == params.maxDepth && level > 0 && prevCells != null) {
-        // final level: every open rule closes on its class marginal,
-        // derived exactly from the parent's cells — no histogram job
-        val st = LevelStats(deriveFinalCounts(prevCells, pendingRoutes),
-          Map.empty, Map.empty, Map.empty)
-        if (profile)
-          println(f"[fit] level=$level rules=${open.size} derived (no job)")
-        val d = decideLevel(open, level, st, schema, params, classLabels,
-          fractional = false, unit, globalMajority)
-        d.closedAdd.foreach { case (r, m, dd) =>
-          closed :+= r; closedMass :+= m; closedDist :+= dd }
-        globalMajority = d.globalMajority
-        open = d.nextOpen
-        level += 1
-      } else {
-      // Routing each row to its (disjoint) open rule. Two plans:
-      //  - small frontier: one flat CASE WHEN over the full root-to-leaf
-      //    conjunctions — no extra shuffle/persist, and the expression
-      //    stays codegen-friendly while it is short;
-      //  - deep frontier (open.size > routeJoinThreshold): the CASE
-      //    WHEN grows linearly with open leaves (thousands-of-leaves
-      //    trees blow past codegen limits and re-evaluate depth-long
-      //    conjunctions per rule), so instead route INCREMENTALLY: join
-      //    the previous level's routed base against a tiny broadcast
-      //    table mapping (parent rid, one split condition) → child rid.
-      //    Constant expression size per level, one broadcast hash join,
-      //    no shuffle — the Spark analogue of the reference's
-      //    distributed-cache rule queue (Main.java:189).
-      // (fractional mode never reaches this loop — it delegated to the
-      // fused fold machinery above, whose weighted RouteX chain is the
-      // one-row-per-(row, child) fan-out a flat rid cannot express)
-      val useJoin = level > 0 && open.size > params.routeJoinThreshold
-      // attributes used on EVERY open path are dead: the once-per-path
-      // rule bars them as candidates for every open rule and therefore
-      // for every future route. Drop them from the routed base's cache
-      // AND the histogram explode — the frontier's shared prefix grows
-      // with depth, so deep trees shed columns (and explode volume) as
-      // they grow. Monotone across levels: a child's usedAttrs is a
-      // superset of its parent's, so a column absent from the previous
-      // level's base is never referenced again.
-      val deadAids: Set[Int] = open.map(_.usedAttrs).reduce(_ intersect _)
-      val liveCatAttrs = catAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-      val liveNumAttrs = numAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-      val base =
-        if (!useJoin) {
-          val ridCol = flatRidColumn(open, names)
-          data.withColumn("__rid", ridCol)
-            .filter(col("__rid") >= 0)
-            .withColumn("__cls", col(clsCol).cast("string"))
-        } else {
-          import spark.implicits._
-          val routeDf = pendingRoutes.toDF(
-            "__prid", "__kind", "__aid", "__boundary", "__lrid", "__rrid",
-            "__children")
-          // raw (un-snapped) values: child predicates compare the raw
-          // column exactly as Rule.toPredicate does
-          // null attribute values fall into neither branch (both
-          // comparisons yield null) → routed rid null → filtered, the
-          // same fate the flat CASE WHEN gives them via `-1`. Each
-          // branch exists only when its attribute class does: a
-          // categorical-only schema gets no num subtree at all (not a
-          // dead element_at over a NullType map), and vice versa.
-          // the route maps cover only the attrs the pending routes
-          // actually split on — those were candidates at the previous
-          // level, so they are guaranteed alive in prevBase even after
-          // dead-column slimming (and the expression stays minimal)
-          val routeAids = pendingRoutes.map(_.aid).toSet
-          val routeNum = numAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-          val routeCat = catAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-          val numBranch =
-            if (routeNum.isEmpty) None
-            else {
-              val numvCol = map(routeNum.flatMap(a =>
-                Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("double"))): _*)
-              Some(when(col("__kind") === "num",
-                when(element_at(numvCol, col("__aid")) <= col("__boundary"), col("__lrid"))
-                  .when(element_at(numvCol, col("__aid")) > col("__boundary"), col("__rrid"))))
-            }
-          val catBranchOf: Column => Column = prev => {
-            val catvCol = map(attrPairs(routeCat, "string"): _*)
-            val hit = element_at(col("__children"), element_at(catvCol, col("__aid")))
-            if (prev == null) when(col("__kind") === "cat", hit)
-            else prev.when(col("__kind") === "cat", hit)
-          }
-          val routedRid = (numBranch, routeCat.isEmpty) match {
-            case (Some(nb), true)  => nb
-            case (Some(nb), false) => catBranchOf(nb)
-            case (None, false)     => catBranchOf(null)
-            case (None, true)      => lit(null) // no routes: route nothing
-          }
-          val routed = prevBase
-            .join(broadcast(routeDf), prevBase("__rid") === routeDf("__prid"))
-            .withColumn("__ridNext", routedRid)
-            .filter(col("__ridNext").isNotNull)
-            .drop("__rid", "__prid", "__kind", "__aid", "__boundary",
-              "__lrid", "__rrid", "__children")
-            .withColumnRenamed("__ridNext", "__rid")
-            // dead columns (shared path prefix) leave the cache here;
-            // .drop is lenient about ones the previous level already shed
-            .drop(names.filter(n => deadAids(schema.attrIndex(n))): _*)
-          if (sys.props.get("graft.fit.capturePlans").contains("1"))
-            capturedRoutePlans.synchronized {
-              capturedRoutePlans += s"routes=${pendingRoutes.size}\n" +
-                routed.queryExecution.executedPlan.toString
-            }
-          // the persist exists for the NEXT level's route join; at
-          // level == maxDepth every open rule closes (depth == level),
-          // so there is no next level and caching would be pure cost
-          if (level < params.maxDepth) persistUncompressed(routed)
-          else routed
-        }
-      if (useJoin && level < params.maxDepth) routedPersists += base
-
-      // ONE scan of the routed base produces EVERY per-level statistic
-      // (the histogram-aggregation shape — executors build bounded
-      // contingency histograms, the driver picks the splits; the
-      // reference instead streams every raw (rule,attr,val,cls) PAIR
-      // through one reducer, MyReducer.java:36-206). A single explode
-      // carries a class sentinel (aid = -1), the categorical values as
-      // strings, and the (quantile-snapped) numeric values cast to
-      // string — doubles round-trip exactly through Double.toString —
-      // and ONE partially-aggregated groupBy collapses the data to
-      // (rule, attr, value, class) cells. Cell cardinality is bounded
-      // by #rules × #attrs × #values × #classes with #values ≤ maxBins
-      // by the binning contract — O(model), never O(data) — so the
-      // entropy / gain-ratio / boundary-scan math runs driver-side in
-      // deterministic sorted order. This replaced three concurrent
-      // Spark stat jobs (categorical stats, numeric window scan, class
-      // counts) and their persisted intermediate: one job, one
-      // collect, one scan of base per level (~2.5× faster per level at
-      // 600k rows; identical decisions — golden-pinned).
-      // The val-null filter drops null ATTRIBUTE values (unsupported
-      // in fit, as in the reference which would NPE on them; such rows
-      // still count for every other attribute); the class label is
-      // never null (checked up front), so the aid = -1 slice is the
-      // exact (rid, cls) marginal and majority/pure checks are unskewed.
-      // at the final level only the class marginal (aid = -1) is ever
-      // consumed — every open rule closes on it (decideLevel's depth
-      // gate), so the attribute slices would be exploded, shuffled and
-      // thrown away (reached only when the elision above could not
-      // fire; kept exact either way)
-      val allPairs: Seq[Column] =
-        if (level == params.maxDepth) Seq(lit(-1), col("__cls"))
-        else Seq(lit(-1), col("__cls")) ++ attrPairs(liveCatAttrs, "string") ++
-          liveNumAttrs.flatMap(a => Seq(lit(schema.attrIndex(a.name)),
-            numValCol(a).cast("string")))
-      // cell counts are plain row counts — an order-independent
-      // integer agg
-      val tLevel0 = System.nanoTime()
-      val cells: Array[(Int, Int, String, String, Long)] = {
-        val b0 = base.select(col("__rid"), col("__cls").as("cls"),
-          lit(1L).as("__w"),
-          explode(map(allPairs: _*)).as(Seq("aid", "val")))
-        b0.filter(col("val").isNotNull)
-          .groupBy("__rid", "aid", "val", "cls")
-          .agg(sum(col("__w")).as("cnt"))
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getString(3),
-            r.getLong(4)))
-      }
-
-      val st = levelStats(cells, schema, classLabels, fractional = false,
-        unit, params)
-      if (profile) {
-        val t = (System.nanoTime() - tLevel0) / 1e9
-        println(f"[fit] level=$level rules=${open.size} cells=${cells.length} stats=$t%.2fs")
-      }
-      val d = decideLevel(open, level, st, schema, params, classLabels,
-        fractional = false, unit, globalMajority)
-      d.closedAdd.foreach { case (r, m, dd) =>
-        closed :+= r; closedMass :+= m; closedDist :+= dd }
-      d.importanceAdd.foreach { case (a, v) => attrImportance(a) += v }
-      globalMajority = d.globalMajority
-      open = d.nextOpen
-      pendingRoutes = d.routes
-      prevCells = cells
-      // the next level (if join-routed) chains off THIS level's base;
-      // the previous persisted base is now safe to free — this level's
-      // stat jobs have already materialized on top of it
-      prevPersisted.foreach(_.unpersist())
-      prevPersisted = if (useJoin) Some(base) else None
-      prevBase = base
-      level += 1
-      }
-    }
-    // maxDepth exhaustion: close any survivors as majority leaves (#4)
-    open.foreach { r =>
-      closed :+= r.closed(globalMajority.getOrElse(classLabels.head))
-      closedMass :+= 0L
-      closedDist :+= Map.empty
-    }
-    (C45Model(schema.copy(classLabels = classLabels), closed,
-      globalMajority.getOrElse(classLabels.head), closedMass, closedDist),
-      attrImportance.toMap)
-    // the fit is fully eager: failed level jobs must not strand cached
-    // blocks — free the routed-base chain, then the training projection
-    } finally routedPersists.foreach(_.unpersist())
-    } finally { if (!prePersisted) data.unpersist() }
-  }
 
   /** Fused k-fold fitting: train k C4.5 models — model f on the rows
     * whose `foldCol` != f — with ONE histogram job per tree level
-    * shared by ALL k fits, instead of k independent fits each scanning
-    * the base once per level (the round-11 flagged cost: cross-
-    * validation was k × fit = 3k+ scans of base for a depth-d tree).
-    *
-    * Mechanics: every row fans out to the (k-1) fits it trains via an
-    * `explode(map(fit → rid))` whose per-fit rid expression is exactly
-    * [[flatRidColumn]] over that fit's frontier (held-out rows get -1
-    * and drop). A second explode emits the per-fit (attr, value) pairs
-    * — per-fit maps selected by a CASE on the fit tag, so each fit
-    * sees its own live attributes and its own quantile-bin snapping —
-    * and one partially-aggregated `groupBy(fit, rid, aid, val, cls)`
-    * collapses everything to O(k × model) cells in a single job. The
-    * driver then replays [[levelStats]] + [[decideLevel]] per fit on
-    * its slice: bit-identical decisions to k independent fits, because
-    * the cell counts and the driver math are identical by construction.
+    * shared by ALL k fits ([[LevelLoop.grow]] with k fold-complement
+    * groups), instead of k independent fits each scanning the base once
+    * per level. Decisions are bit-identical to k independent fits: the
+    * cell counts and the driver math are identical by construction.
     * Shuffle volume is pre-aggregated counts (k× a single fit's, the
     * same total the k separate jobs shuffled); what's saved is (k-1)
-    * scans of base per level plus per-fit job overhead — at 100 TB the
-    * dominant cost. Total explode volume is unchanged vs sequential:
-    * rows × (k-1) × attrs either way.
+    * scans of base per level plus per-fit job overhead.
     *
-    * Frontiers are routed FLAT at any width here (no join-routing) in
-    * the unweighted path: rid assignment still matches the sequential
-    * fit exactly (the join-routed rid is pinned to equal the flat rid
-    * by construction — see the Route scaladoc), so results are
-    * identical; only the expression size grows with very deep
-    * frontiers.
-    *
-    * With `fractional = true` (null attribute values under
-    * missing-mode "fractional"), a flat rid cannot express membership
-    * — a null-valued row belongs to EVERY child of its rule's split
-    * with fractional weight — so the fused fit instead maintains ONE
-    * `__fit`-tagged weighted routed base across levels, exactly the
-    * sequential fit's RouteX broadcast-join fan-out but with the fit
-    * tag riding in the join key: level 0 fans `stamped` out to the
-    * (k-1) fits each row trains (the same explode volume the flat
-    * path pays), each later level joins the previous base against the
-    * union of all fits' routing edges, and the per-level histogram is
-    * one weighted `groupBy(fit, rid, aid, val, cls)` over that base.
-    * Decisions stay bit-identical to k sequential fractional fits: the
-    * weight expression ([[routeXWeight]], shared with [[fit]]), micro
-    * rounding, and driver math are shared code, and integer weight
-    * sums are order-independent under any partitioning. This replaces
-    * the former fallback of k sequential fits (k scans of base per
-    * level) for null-bearing corpora. Peak cache is capped by a
-    * CLEAN/DIRTY split (round 17): only rows with a null attribute
-    * value can fan out, so only they ride the weighted chain — each
-    * join-routed level persists dirty×(k-1) rows, not rows×(k-1),
-    * while the null-free majority re-routes per fit through the flat
-    * rid CASE over the caller's rows×1 cache (one union, still ONE
-    * aggregation job per level; a clean row's chain contribution was
-    * exactly W1 at its pinned flat rid, so cells are bit-identical).
-    * At a typical few-percent null rate the persisted state is ≈
-    * rows×1; a fully-null corpus degrades to the old rows×(k-1)
-    * shape, MEMORY_AND_DISK, one level at a time.
-    *
-    * Mass-scale caveat (round-16 advice): the fractional decision is
-    * GLOBAL — if any fold carries null attribute values, all k fits
-    * run micro-weighted. This does NOT change the recorded
-    * `leafMass`/`leafDist` scale for a fit whose training complement
-    * happens to be null-free: rows without nulls never fan out, so
-    * every weight is exactly 10⁶ and the recorded micros equal a
-    * direct `C45.fit` on that subset bit-for-bit (drop-mode fits
-    * record counts × 10⁶ — same scale; MassScaleSpec pins all three
-    * corners).
+    * With `fractional = true` (null attribute values under missing-mode
+    * "fractional") the fits grow in exact micros with fan-out on: only
+    * rows with a null attribute value ride the fit-tagged weighted
+    * RouteX chain, persisted dirty×(k-1) rows per join-routed level,
+    * while the null-free majority routes flat through the caller's
+    * cache. The fractional decision is GLOBAL — if any fold carries
+    * null attribute values, all k fits run micro-weighted — but this
+    * does not change the recorded `leafMass`/`leafDist` of a fit whose
+    * training complement is null-free: its rows never fan out, so every
+    * weight is exactly 10⁶ and the micros equal a direct `C45.fit` on
+    * that subset (MassScaleSpec pins all three corners).
     *
     * Contract: `stamped` is persisted by the caller and contains
     * `foldCol` (int in [0, k)) + the schema's attributes + class
-    * column; class labels are non-null (caller-probed).
+    * column; class labels are non-null (caller-probed). Labels, when
+    * undeclared, are discovered per fit in one job.
     * `approxDistinct` optionally carries the per-(fit, numeric attr)
     * approx-distinct counts when the caller already aggregated them
     * (crossValidate folds them into its null-probe scan); absent, one
-    * batched gating job runs here. */
+    * batched gating job runs here. Each fit's quantile edges come from
+    * its own training rows. */
   private[fit] def fitFolds(stamped: DataFrame, foldCol: String, k: Int,
       schema: C45Schema, params: C45Params,
       approxDistinct: Option[Map[(Int, String), Long]] = None,
       fractional: Boolean = false,
       importanceOut: Array[scala.collection.mutable.Map[Int, Double]] = null)
       : Seq[C45Model] = {
-    val names = schema.attrNames
-    val clsCol = schema.classCol
-    val catAttrs = schema.categoricalAttrs
-    val numAttrs = schema.numericAttrs
     val fits = 0 until k
-    val profile = sys.props.get("graft.fit.profile").contains("1") ||
-      sys.env.get("GRAFT_FIT_PROFILE").contains("1")
-
-    // per-fit class-label sets: declared, else discovered in ONE job
-    // (label → set of folds containing it; fit f trains on folds != f)
-    val classLabelsByFit: Seq[Seq[String]] =
+    // per-fit class-label sets: label → folds containing it; fit f
+    // trains on folds != f
+    val labelsByFit: Seq[Seq[String]] =
       if (schema.classLabels.nonEmpty) fits.map(_ => schema.classLabels)
       else {
-        val rows = stamped.groupBy(col(clsCol).cast("string").as("c"))
+        val pairs = stamped.groupBy(col(schema.classCol).cast("string").as("c"))
           .agg(collect_set(col(foldCol)).as("fs")).collect()
-        val pairs = rows.map(r => r.getString(0) -> r.getSeq[Int](1).toSet)
-        fits.map(f => pairs.collect {
-          case (c, fs) if fs.exists(_ != f) => c }.sorted.toSeq)
+          .map(r => r.getString(0) -> r.getSeq[Int](1).toSet)
+        fits.map(f => pairs.collect { case (c, fs) if fs.exists(_ != f) => c }.sorted.toSeq)
       }
-
-    // per-fit quantile binning, mirroring fit's maxBins contract: ONE
-    // batched approx-distinct job gates (HLL sketches are set-valued,
-    // so the when()-filtered agg equals the sequential filtered scan),
-    // then per-fit approxQuantile through the SAME API the sequential
-    // fit uses — identical edges, identical snapping
-    val tBins0 = System.nanoTime()
-    val binEdgesByFit: Map[Int, Map[Int, Array[Double]]] =
-      if (params.maxBins <= 0 || numAttrs.isEmpty)
-        fits.map(_ -> Map.empty[Int, Array[Double]]).toMap
-      else {
-        val dc: Map[(Int, String), Long] = approxDistinct.getOrElse {
-          val aggs = for { f <- fits; a <- numAttrs } yield
-            approx_count_distinct(when(col(foldCol) =!= f, col(a.name)))
-              .as(s"dc_${f}_${a.name}")
-          val dcRow = stamped.agg(aggs.head, aggs.tail: _*).collect()(0)
-          (for { f <- fits; a <- numAttrs } yield
-            (f, a.name) -> dcRow.getAs[Long](s"dc_${f}_${a.name}")).toMap
-        }
-        fits.map { f =>
-          val need = numAttrs.filter(a => dc((f, a.name)) > params.maxBins)
-          val edges =
-            if (need.isEmpty) Map.empty[Int, Array[Double]]
-            else {
-              val probs = (1 until params.maxBins)
-                .map(_.toDouble / params.maxBins).toArray
-              val qs = stamped.filter(col(foldCol) =!= f)
-                .stat.approxQuantile(need.map(_.name).toArray, probs, 1e-4)
-              need.map(_.name).zip(qs).collect {
-                case (nm, es) if es.nonEmpty =>
-                  schema.attrIndex(nm) -> es.distinct.sorted
-              }.toMap
-            }
-          f -> edges
-        }.toMap
-      }
-    if (profile && params.maxBins > 0 && numAttrs.nonEmpty)
-      println(f"[fitFolds] binning (gate + per-fit approxQuantile): " +
-        f"${(System.nanoTime() - tBins0) / 1e9}%.2fs")
-
-    def numValColF(f: Int)(a: graft.meta.AttrMeta): Column = {
-      val raw = col(a.name).cast("double")
-      binEdgesByFit(f).get(schema.attrIndex(a.name))
-        .map(e => graft.functions.SortedCeilSnap.snapTo(e, raw))
-        .getOrElse(raw)
-    }
-
-    final class FState {
-      var open: Vector[Rule] = Vector(Rule.root)
-      var closed: Vector[Rule] = Vector.empty
-      var closedMass: Vector[Long] = Vector.empty
-      var closedDist: Vector[Map[String, Long]] = Vector.empty
-      var globalMajority: Option[String] = None
-      var routesX: Seq[RouteX] = Nil
-      // previous level's routes + cells: lets the final level close on
-      // derived class marginals with no histogram job (drop mode only
-      // — see deriveFinalCounts)
-      var routes: Seq[Route] = Nil
-      var cells: Array[(Int, Int, String, String, Long)] = null
-    }
-    val state = Array.fill(k)(new FState)
-    val W1 = 1000000L
-    val unit = if (fractional) 1e6 else 1.0
-    var level = 0
-    // fractional routing state, mirroring fit's: the previous level's
-    // fused routed base and the persisted handles to sweep on failure
-    var prevBase: DataFrame = null
-    var prevPersisted: Option[DataFrame] = None
-    val routedPersists = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-    while (state.exists(_.open.nonEmpty) && level <= params.maxDepth) {
-      val tLevel0 = System.nanoTime()
-      val active = fits.filter(f => state(f).open.nonEmpty)
-      if (!fractional && level == params.maxDepth && level > 0 &&
-          active.forall(f => state(f).cells != null)) {
-        // final level, drop mode: every open rule closes on its class
-        // marginal, derived exactly from the parent's cells — the
-        // widest histogram job of the fused fit is skipped outright
-        active.foreach { f =>
-          val s = state(f)
-          val st = LevelStats(deriveFinalCounts(s.cells, s.routes),
-            Map.empty, Map.empty, Map.empty)
-          val d = decideLevel(s.open, level, st, schema, params,
-            classLabelsByFit(f), fractional, unit, s.globalMajority)
-          d.closedAdd.foreach { case (r, m, dd) =>
-            s.closed :+= r; s.closedMass :+= m; s.closedDist :+= dd }
-          s.globalMajority = d.globalMajority
-          s.open = d.nextOpen
-        }
-        if (profile)
-          println(f"[fitFolds] level=$level fits=${active.size} derived (no job)")
-        level += 1
-      } else {
-      val attrMaps: Seq[(Int, Column)] = active.map { f =>
-        val deadAids = state(f).open.map(_.usedAttrs).reduce(_ intersect _)
-        val liveCat = catAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-        val liveNum = numAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-        // final level: only the class marginal is consumed (every open
-        // rule closes on depth) — skip the attribute slices outright
-        val pairs: Seq[Column] =
-          if (level == params.maxDepth) Seq(lit(-1), col("__cls"))
-          else Seq(lit(-1), col("__cls")) ++
-            liveCat.flatMap(a =>
-              Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("string"))) ++
-            liveNum.flatMap(a => Seq(lit(schema.attrIndex(a.name)),
-              numValColF(f)(a).cast("string")))
-        (f, map(pairs: _*))
-      }
-      val mapByFit: Column =
-        if (attrMaps.size == 1) attrMaps.head._2
-        else attrMaps.tail.foldLeft(
-          when(col("__fit") === attrMaps.head._1, attrMaps.head._2)) {
-          case (acc, (f, m)) => acc.when(col("__fit") === f, m)
-        }
-      def groupRows(rows: Array[org.apache.spark.sql.Row]):
-          Map[Int, Array[(Int, Int, String, String, Long)]] =
-        rows.groupBy(_.getInt(0)).view.mapValues(_.map(r =>
-          (r.getInt(1), r.getInt(2), r.getString(3), r.getString(4),
-            r.getLong(5)))).toMap
-      // only rows carrying a null attribute value can ever FAN OUT —
-      // a null-free row holds its full weight down exactly one path of
-      // every fit (each per-condition factor is 0 or 1). So the
-      // weighted RouteX chain carries ONLY the null-bearing ("dirty")
-      // rows; the null-free majority routes per fit with the same flat
-      // rid CASE the unweighted path uses, at constant weight W1, read
-      // straight through the caller's rows×1 cache each level. This
-      // caps the chain's persisted state at dirty×(k-1) instead of
-      // rows×(k-1) per join-routed level (the round-16 peak-cache
-      // flag) while keeping cells bit-identical: in the full fan-out a
-      // clean row contributed exactly W1 at its flat rid (the routed
-      // crid is pinned equal to the flat rid by construction).
-      lazy val dirtyCol: Column = names.map(col(_).isNull)
-        .reduceOption(_ || _).getOrElse(lit(false))
-      // the level-0 fan-out base of the DIRTY rows, shared below: one
-      // row per (dirty row, fit) edge for the (k-1) fits each row
-      // trains, at full weight and root rid. Lazy — only the paths
-      // that scan or chain off it pay.
-      def rootFanout: DataFrame = stamped
-        .filter(dirtyCol)
-        .withColumn("__cls", col(clsCol).cast("string"))
-        .withColumn("__fit",
-          explode(array(fits.map(f => lit(f)): _*)))
-        .filter(col(foldCol) =!= col("__fit"))
-        .withColumn("__rid", flatRidColumn(Vector(Rule.root), names))
-        .filter(col("__rid") >= 0)
-        .withColumn("__w", lit(W1))
-        .select(col("__fit") +: col("__rid") +: col("__w") +:
-          col("__cls") +: names.map(col): _*)
-      // level-0 shortcut shared by both paths: at the root every fit
-      // holds rid 0 at full weight, and with no per-fit quantile
-      // binning every fit's attr map is identical — so each fit's
-      // cells are a driver-side composition of ONE per-fold marginal
-      // (cells(f) = Σ over folds ≠ f of byFold(fold, ·)) and the
-      // (k-1)-way row fan-out never runs for the histogram: the
-      // corpus-sized level aggregates k× less exploded volume. Exact
-      // long sums — bit-identical cells to the fan-out aggregation.
-      val marginal0 = level == 0 && binEdgesByFit.values.forall(_.isEmpty)
-      // one description per LEVEL, set for every job the level's
-      // histogram launches (the collect plus any broadcast builds it
-      // triggers): makes the Spark UI read "which level is running",
-      // and gives CrossValSpec a stable one-query-per-level witness
-      // (distinct descriptions == levels) instead of stage-name
-      // matching
-      val sc = stamped.sparkSession.sparkContext
-      val prevDesc = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"graft.fitFolds level=$level k=$k histogram")
-      val cellsByFit: Map[Int, Array[(Int, Int, String, String, Long)]] =
-        try {
-        if (marginal0) {
-          // level 1's route join (fractional) chains off the DIRTY
-          // fan-out — expose it lazily; nothing materializes it this
-          // level (clean rows re-enter per level via the flat rid side)
-          if (fractional) prevBase = rootFanout
-          val pairs: Seq[Column] = Seq(lit(-1), col("__cls")) ++
-            catAttrs.flatMap(a =>
-              Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("string"))) ++
-            numAttrs.flatMap(a => Seq(lit(schema.attrIndex(a.name)),
-              col(a.name).cast("double").cast("string")))
-          val byFold = stamped
-            .withColumn("__cls", col(clsCol).cast("string"))
-            .select(col(foldCol).as("__fold"), col("__cls").as("cls"),
-              explode(map(pairs: _*)).as(Seq("aid", "val")))
-            .filter(col("val").isNotNull)
-            .groupBy("__fold", "aid", "val", "cls")
-            .agg(sum(lit(1L)).as("cnt"))
-            .collect()
-            .map(r => (r.getInt(0), r.getInt(1), r.getString(2),
-              r.getString(3), r.getLong(4)))
-          val w0 = if (fractional) W1 else 1L
-          active.map { f =>
-            f -> byFold.iterator.filter(_._1 != f).toSeq
-              .groupBy(t => (t._2, t._3, t._4))
-              .map { case ((aid, v, c), g) =>
-                (0, aid, v, c, g.map(_._5).sum * w0) }
-              .toArray
-          }.toMap
-        } else if (!fractional) {
-          val ridPairs: Seq[Column] = active.flatMap { f =>
-            Seq(lit(f), when(col(foldCol) === f, lit(-1))
-              .otherwise(flatRidColumn(state(f).open, names)))
-          }
-          groupRows(stamped
-            .withColumn("__cls", col(clsCol).cast("string"))
-            .select(col("__cls") +: names.map(col) :+
-              explode(map(ridPairs: _*)).as(Seq("__fit", "__rid")): _*)
-            .filter(col("__rid") >= 0)
-            .select(col("__fit"), col("__rid"), col("__cls").as("cls"),
-              explode(mapByFit).as(Seq("aid", "val")))
-            .filter(col("val").isNotNull)
-            .groupBy("__fit", "__rid", "aid", "val", "cls")
-            .agg(sum(lit(1L)).as("cnt"))
-            .collect())
-        } else {
-          val spark = stamped.sparkSession
-          import spark.implicits._
-          val base =
-            if (level == 0) rootFanout
-            else {
-              // one broadcast join against the union of every active
-              // fit's routing edges — the sequential fit's fractional
-              // fan-out with the fit tag riding in the join key. A fit
-              // that finished contributes no edges, so its rows drop
-              // out of the base here.
-              val xr = active.flatMap(f => state(f).routesX.map(x =>
-                (f, x.prid, x.kind, x.aid, x.boundary, x.side, x.catval,
-                  x.crid, x.frac)))
-              val routeDf = xr.toDF("__pfit", "__prid", "__kind", "__aid",
-                "__boundary", "__side", "__catval", "__crid", "__frac")
-              val routeAids = xr.map(_._4).toSet
-              val routeNum = numAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-              val routeCat = catAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-              // attrs used on every open path of EVERY active fit leave
-              // the fused cache (each fit's histogram map already skips
-              // its own dead attrs)
-              val deadAll = active.map(f =>
-                state(f).open.map(_.usedAttrs).reduce(_ intersect _))
-                .reduce(_ intersect _)
-              prevBase
-                .join(broadcast(routeDf),
-                  prevBase("__fit") === routeDf("__pfit") &&
-                    prevBase("__rid") === routeDf("__prid"))
-                .withColumn("__wN", routeXWeight(routeNum, routeCat, schema))
-                .filter(col("__wN").isNotNull && col("__wN") > 0)
-                .drop("__rid", "__w", "__pfit", "__prid", "__kind", "__aid",
-                  "__boundary", "__side", "__catval", "__frac")
-                .withColumnRenamed("__crid", "__rid")
-                .withColumnRenamed("__wN", "__w")
-                .drop(names.filter(n => deadAll(schema.attrIndex(n))): _*)
-            }
-          // level 0 reads through the caller's stamped cache (the fan-
-          // out recompute is one explode over that cache — same policy
-          // as fit's unpersisted flat level); join-routed levels persist
-          // for the NEXT level's route join, freed once it materializes
-          val based =
-            if (level >= 1 && level < params.maxDepth) {
-              val p = persistUncompressed(base); routedPersists += p; p
-            } else base
-          // dirty side: the weighted chain's exploded histogram rows;
-          // clean side: flat per-fit rids over the null-free slice of
-          // the caller's cache at weight W1. One union, ONE
-          // aggregation job per level — exact long sums, so the merge
-          // is order-independent and bit-identical to the all-rows
-          // fan-out this replaces.
-          val dirtySide = based
-            .select(col("__fit"), col("__rid"), col("__cls").as("cls"),
-              col("__w"), explode(mapByFit).as(Seq("aid", "val")))
-          val ridPairs: Seq[Column] = active.flatMap { f =>
-            Seq(lit(f), when(col(foldCol) === f, lit(-1))
-              .otherwise(flatRidColumn(state(f).open, names)))
-          }
-          val cleanSide = stamped
-            .filter(!dirtyCol)
-            .withColumn("__cls", col(clsCol).cast("string"))
-            .select(col("__cls") +: names.map(col) :+
-              explode(map(ridPairs: _*)).as(Seq("__fit", "__rid")): _*)
-            .filter(col("__rid") >= 0)
-            .select(col("__fit"), col("__rid"), col("__cls").as("cls"),
-              lit(W1).as("__w"), explode(mapByFit).as(Seq("aid", "val")))
-          val rows = dirtySide.unionByName(cleanSide)
-            .filter(col("val").isNotNull)
-            .groupBy("__fit", "__rid", "aid", "val", "cls")
-            .agg(sum(col("__w")).as("cnt"))
-            .collect()
-          prevPersisted.foreach(_.unpersist())
-          prevPersisted =
-            if (level >= 1 && level < params.maxDepth) Some(based) else None
-          prevBase = based
-          groupRows(rows)
-        }
-        } finally sc.setJobDescription(prevDesc)
-      if (profile) {
-        val t = (System.nanoTime() - tLevel0) / 1e9
-        println(f"[fitFolds] level=$level fits=${active.size} " +
-          f"cells=${cellsByFit.values.map(_.length).sum} hist=$t%.2fs")
-      }
-      active.foreach { f =>
-        val cells: Array[(Int, Int, String, String, Long)] =
-          cellsByFit.getOrElse(f, Array.empty)
-        val s = state(f)
-        val st = levelStats(cells, schema, classLabelsByFit(f),
-          fractional, unit, params)
-        val d = decideLevel(s.open, level, st, schema, params,
-          classLabelsByFit(f), fractional, unit, s.globalMajority)
-        d.closedAdd.foreach { case (r, m, dd) =>
-          s.closed :+= r; s.closedMass :+= m; s.closedDist :+= dd }
-        if (importanceOut != null)
-          d.importanceAdd.foreach { case (a, v) => importanceOut(f)(a) += v }
-        s.globalMajority = d.globalMajority
-        s.open = d.nextOpen
-        s.routesX = d.routesX
-        s.routes = d.routes
-        s.cells = cells
-      }
-      level += 1
-      }
-    }
-    } finally routedPersists.foreach(_.unpersist())
-    fits.map { f =>
-      val s = state(f)
-      val labels = classLabelsByFit(f)
-      // maxDepth exhaustion: close survivors as majority leaves (#4)
-      s.open.foreach { r =>
-        s.closed :+= r.closed(s.globalMajority.getOrElse(labels.head))
-        s.closedMass :+= 0L
-        s.closedDist :+= Map.empty
-      }
-      C45Model(schema.copy(classLabels = labels), s.closed,
-        s.globalMajority.getOrElse(labels.head), s.closedMass, s.closedDist)
-    }
+    val members = fits.map(f => col(foldCol) =!= f)
+    val dc: Map[(Int, String), Long] =
+      if (params.maxBins <= 0 || schema.numericAttrs.isEmpty) Map.empty
+      else approxDistinct.getOrElse(
+        LevelLoop.probe(stamped, schema, params.maxBins, members).distinct)
+    val groups = fits.map(f => FitGroup(labelsByFit(f),
+      LevelLoop.binEdges(stamped.filter(members(f)), schema, params.maxBins,
+        a => dc((f, a)))))
+    val out = LevelLoop.grow(stamped, schema, params, groups, "graft.fitFolds",
+      weight = lit(if (fractional) 1000000L else 1L), micros = fractional,
+      fanOut = fractional, holdOut = Some(foldCol))
+    if (importanceOut != null)
+      fits.foreach(f => out(f)._2.foreach { case (a, v) => importanceOut(f)(a) += v })
+    out.map(_._1)
   }
 }

@@ -50,48 +50,20 @@ object C45CrossVal {
       .select(("__fold" +: names :+ clsCol)
         .map(org.apache.spark.sql.functions.col): _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // phase wall-clock diagnostics: -Dgraft.fit.profile=1 (or env
-    // GRAFT_FIT_PROFILE=1 through a forked runner), same switch as fit
-    val profile = sys.props.get("graft.fit.profile").contains("1") ||
-      sys.env.get("GRAFT_FIT_PROFILE").contains("1")
-    def tick[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime(); val r = body
-      if (profile)
-        println(f"[crossval] $what: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
     try {
-      // one up-front probe decides the mode (mirrors C45.fit's own):
-      // non-null labels are required either way; null ATTRIBUTE values
-      // + fractional mode engage fitFolds' weighted routed-base path
-      // the cache-building scan carries EVERYTHING the path decision
-      // and the fused fit's binning gate need: null counters plus the
-      // per-(fold-exclusion, numeric attr) approx-distinct sketches
-      // (HLL over a when()-filter equals HLL over the filtered subset
-      // — the sketch only sees the value set), so fitFolds starts
-      // straight into its per-level histogram jobs
-      val numAttrs = schema.numericAttrs
-      val dcAggs =
-        if (params.maxBins <= 0) Seq.empty
-        else for { f <- 0 until k; a <- numAttrs } yield
-          approx_count_distinct(when(col("__fold") =!= f, col(a.name)))
-            .as(s"dc_${f}_${a.name}")
-      val probeAggs = Seq(
-        count(when(col(clsCol).isNull, 1)).as("cls"),
-        count(when(names.map(col(_).isNull).reduceOption(_ || _)
-          .getOrElse(lit(false)), 1)).as("attr")) ++ dcAggs
-      val nullProbe = tick("null probe + cache build")(
-        stamped.agg(probeAggs.head, probeAggs.tail: _*).head())
-      require(nullProbe.getLong(0) == 0L,
-        s"C45.fit requires non-null class labels: column '$clsCol' contains NULLs")
+      // the cache-building scan carries EVERYTHING the fused fit needs
+      // before its level loop: the label check, whether any attribute
+      // value is NULL (fractional mode then engages fitFolds' weighted
+      // fan-out) and the per-(fold-exclusion, numeric attr) binning
+      // sketches
+      val members = (0 until k).map(f => col("__fold") =!= f)
+      val probe = LevelLoop.probe(stamped, schema, params.maxBins, members)
+        .requireLabels("C45.fit", clsCol)
       val fractional = params.missingMode == "fractional" &&
-        names.nonEmpty && nullProbe.getLong(1) > 0L
-      val dc: Option[Map[(Int, String), Long]] =
-        if (params.maxBins <= 0) None
-        else Some((for { f <- 0 until k; a <- numAttrs } yield
-          (f, a.name) -> nullProbe.getAs[Long](s"dc_${f}_${a.name}")).toMap)
-      val models: Seq[C45Model] = tick("fits")(
-        C45.fitFolds(stamped, "__fold", k, schema, params, dc, fractional))
+        names.nonEmpty && probe.nullAttrRows > 0L
+      val dc = if (params.maxBins <= 0) None else Some(probe.distinct)
+      val models: Seq[C45Model] =
+        C45.fitFolds(stamped, "__fold", k, schema, params, dc, fractional)
       // fused evaluation: k prediction columns (each a map-only CASE
       // WHEN / broadcast level-walk), ONE aggregation over the cache
       // with per-fold filtered counters — identical counts to scoring
@@ -104,7 +76,7 @@ object C45CrossVal {
           count(when(col("__fold") === f &&
             col(s"__pred_$f") === col(clsCol).cast("string"), 1)).as(s"c_$f"))
       }
-      val row = tick("eval")(scored.agg(aggs.head, aggs.tail: _*).head())
+      val row = scored.agg(aggs.head, aggs.tail: _*).head()
       (0 until k).map(f =>
         FoldResult(f, row.getAs[Long](s"n_$f"), row.getAs[Long](s"c_$f")))
     } finally stamped.unpersist()

@@ -754,18 +754,9 @@ object Dedup {
     // (shared context and cache — the persisted edge table stays
     // warm); big graphs stay in the caller's session untouched. The
     // final label table re-roots back to the caller's session.
-    val sess = pairs.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L)) // defensive: non-numeric conf ("auto") → wide
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = nParts < sessSp &&
-      !sys.env.get("GRAFT_CC_LOOPWIDTH").contains("0")
-    val loopSess =
-      if (small) bridge.cloneWithConf(sess,
-        "spark.sql.shuffle.partitions" -> nParts.toString)
-      else sess
-    val und = if (small) bridge.reRoot(undirected, loopSess) else undirected
+    val loop = org.apache.spark.sql.graft.SessionBridge.loopSession(
+      pairs.sparkSession, nParts)
+    val und = loop.inLoop(undirected)
     val edges = und
       .repartition(nParts, col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -794,8 +785,7 @@ object Dedup {
     // still converges in O(log diameter) extra rounds instead of
     // exceeding maxIter (measured: jump-every-round cost more than it
     // saved on the bench graphs; diameter ≤ 3 is the norm there)
-    val JumpAfter =
-      sys.env.get("GRAFT_CC_JUMP_AFTER").map(_.toInt).getOrElse(3)
+    val JumpAfter = 3
     while (!converged && iter < maxIter) {
       val viaNeighbor = edges
         .join(labels.withColumnRenamed("id", "dst"), "dst")
@@ -840,12 +830,10 @@ object Dedup {
       prevSum = nextSum
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_PROFILE"))
-      println(s"[cc] converged=$converged rounds=$iter edges=$nEdges")
     // the RETURNED label table stays checkpointed (callers read it);
     // its blocks are one bounded table, reclaimed when the caller
     // drops the Dataset and the driver GCs the RDD
-    if (small) bridge.reRoot(labels, sess) else labels
+    loop.out(labels)
     } finally edges.unpersist()
     // the whole loop is eager, so failures must not leak cached tables
     // (unpersist on an already-released table is a harmless no-op)

@@ -37,6 +37,12 @@ object GraphRank {
 
   val U: Long = 1000000000000L // rank unit: picos
 
+  /** The shuffle width of a graph loop over `edgeRows` edge rows: one
+    * partition per 500k rows. Node-sized iterative state at a
+    * corpus-tuned width pays rounds × the full per-partition fixed cost
+    * for nothing ([[hits]] scaladoc). */
+  private def loopWidth(edgeRows: Long): Long = edgeRows / 500000L + 1
+
   /** Ranks after `iters` rounds: (id, deg, pr_picos) for EVERY node
     * (isolated nodes have deg 0 and the restart-base rank). */
   def pagerank(pairs: DataFrame, nodes: DataFrame, idCol: String,
@@ -64,17 +70,9 @@ object GraphRank {
     // clone exists, so an expensive upstream miner never runs narrow.
     // Exact integer arithmetic throughout: the labeling is width-
     // independent and the final plan re-roots back to the caller.
-    val sess = pairs.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L))
-    val loopSp = math.max(1L, math.min(sessSp, edges.count() / 500000L + 1))
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = loopSp < sessSp
-    val loopSess = if (small) bridge.cloneWithConf(sess,
-      "spark.sql.shuffle.partitions" -> loopSp.toString) else sess
-    def inLoop(df: DataFrame): DataFrame =
-      if (small) bridge.reRoot(df, loopSess) else df
+    val loop = org.apache.spark.sql.graft.SessionBridge.loopSession(
+      pairs.sparkSession, loopWidth(edges.count()))
+    import loop.inLoop
     val edgesL = inLoop(edges)
     val degL = inLoop(deg)
     val nsL = inLoop(ns)
@@ -100,7 +98,7 @@ object GraphRank {
     val out = pr.join(degL, pr("id") === degL("u"), "left")
       .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"),
         col("pr").as("pr_picos"))
-    if (small) bridge.reRoot(out, sess) else out
+    loop.out(out)
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) over a
@@ -137,17 +135,9 @@ object GraphRank {
     // ([[hits]]' discipline); the count materializes the edge cache at
     // the caller's width first. Votes/argmax are exact integer aggs —
     // width-independent.
-    val sess = pairs.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L))
-    val loopSp = math.max(1L, math.min(sessSp, edges.count() / 500000L + 1))
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = loopSp < sessSp
-    val loopSess = if (small) bridge.cloneWithConf(sess,
-      "spark.sql.shuffle.partitions" -> loopSp.toString) else sess
-    def inLoop(df: DataFrame): DataFrame =
-      if (small) bridge.reRoot(df, loopSess) else df
+    val loop = org.apache.spark.sql.graft.SessionBridge.loopSession(
+      pairs.sparkSession, loopWidth(edges.count()))
+    import loop.inLoop
     val edgesL = inLoop(edges)
     val nsL = inLoop(ns)
     var lbl = nsL.select(col("id"), col("id").as("lbl")).localCheckpoint()
@@ -169,7 +159,7 @@ object GraphRank {
       lbl = next
     }
     val out = lbl.select(col("id"), col("lbl").as("community"))
-    if (small) bridge.reRoot(out, sess) else out
+    loop.out(out)
   }
 
   /** Per-node triangle counts + local clustering coefficient over a
@@ -265,16 +255,9 @@ object GraphRank {
     // conf-isolated clone ([[hits]]' discipline); peel rounds are
     // degree counts + semi-joins over a shrinking edge table — exact
     // and width-independent.
-    val sess = pairs.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L))
-    val loopSp = math.max(1L, math.min(sessSp, edges.count() / 500000L + 1))
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = loopSp < sessSp
-    val loopSess = if (small) bridge.cloneWithConf(sess,
-      "spark.sql.shuffle.partitions" -> loopSp.toString) else sess
-    if (small) edges = bridge.reRoot(edges, loopSess)
+    val loop = org.apache.spark.sql.graft.SessionBridge.loopSession(
+      pairs.sparkSession, loopWidth(edges.count()))
+    edges = loop.inLoop(edges)
     for (_ <- 1 to rounds) {
       val keep = edges.groupBy("u").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select(col("u"))
@@ -287,7 +270,7 @@ object GraphRank {
       edges = next
     }
     val out = edges.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-    if (small) bridge.reRoot(out, sess) else out
+    loop.out(out)
   }
 
   /** Multi-source BFS hop distance over a pair table: the minimum
@@ -326,17 +309,10 @@ object GraphRank {
     // ([[hits]]' discipline); the count materializes the edge cache at
     // the caller's width first. Frontier expansion is distinct/anti-
     // join over exact ids — width-independent.
-    val sess = pairs.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L))
-    val loopSp = math.max(1L, math.min(sessSp, edges.count() / 500000L + 1))
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = loopSp < sessSp
-    val loopSess = if (small) bridge.cloneWithConf(sess,
-      "spark.sql.shuffle.partitions" -> loopSp.toString) else sess
-    val edgesL = if (small) bridge.reRoot(edges, loopSess) else edges
-    val sourcesL = if (small) bridge.reRoot(sources, loopSess) else sources
+    val loop = org.apache.spark.sql.graft.SessionBridge.loopSession(
+      pairs.sparkSession, loopWidth(edges.count()))
+    val edgesL = loop.inLoop(edges)
+    val sourcesL = loop.inLoop(sources)
     val frontiers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var frontier = sourcesL.select(col(idCol).as("id")).distinct()
       .select(col("id"), lit(0L).as("hops")).localCheckpoint()
@@ -368,7 +344,7 @@ object GraphRank {
       r += 1
     }
     val out = frontiers.reduce(_.union(_))
-    if (small) bridge.reRoot(out, sess) else out
+    loop.out(out)
   }
 
   /** HITS hub/authority scores (Kleinberg, JACM 1999) over a DIRECTED
@@ -441,23 +417,13 @@ object GraphRank {
     require(maxDeg < 9000000L,
       s"hits: max node degree $maxDeg exceeds the long headroom " +
         "(raw*10^6 wraps past deg ~9e6); pre-aggregate or shard the graph")
-    val sess = e0.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L)) // defensive: non-numeric conf ("auto") → treat as wide
-    val loopSp = math.max(1L,
-      math.min(sessSp, degStats.getLong(1) / 500000L + 1))
     // big graphs run at the session width in the caller's session;
     // small ones get a conf-isolated clone at the loop width (shared
     // context and cache, so the persisted edge/node tables stay warm)
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = loopSp < sessSp
-    val loopSess =
-      if (small) bridge.cloneWithConf(sess,
-        "spark.sql.shuffle.partitions" -> loopSp.toString)
-      else sess
-    val e = if (small) bridge.reRoot(e0, loopSess) else e0
-    val ns = if (small) bridge.reRoot(ns0, loopSess) else ns0
+    val loop = org.apache.spark.sql.graft.SessionBridge.loopSession(
+      e0.sparkSession, loopWidth(degStats.getLong(1)))
+    val e = loop.inLoop(e0)
+    val ns = loop.inLoop(ns0)
     var hub = ns.select(col("id"), lit(M).as("hub")).localCheckpoint()
     var auth = ns.select(col("id"), lit(M).as("auth")).localCheckpoint()
     def half(score: DataFrame, scoreCol: String, srcKey: String,
@@ -486,7 +452,7 @@ object GraphRank {
     val out = hub.join(auth, "id")
       .select(col("id"), col("hub").as("hub_micros"),
         col("auth").as("auth_micros"))
-    if (small) bridge.reRoot(out, sess) else out
+    loop.out(out)
   }
 
   /** Common-neighbor link prediction over a pair table: for every

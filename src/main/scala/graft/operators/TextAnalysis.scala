@@ -435,18 +435,10 @@ object TextAnalysis {
       df.localCheckpoint() // eager: materializes now, truncates lineage
     var cur = keep(words0)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    val profile = sys.props.get("graft.fit.profile").contains("1") ||
-      sys.env.get("GRAFT_FIT_PROFILE").contains("1")
-    var tWindow = System.nanoTime()
     try {
       var r = 1
       var dry = false
       while (r <= nMerges && !dry) {
-        if (profile && r % 50 == 1 && r > 1) {
-          println(f"[bpe] rounds ${r - 50}%d..${r - 1}%d: " +
-            f"${(System.nanoTime() - tWindow) / 1e9}%.1fs")
-          tWindow = System.nanoTime()
-        }
         val arr = split(trim(col("s")), "  ")
         val top = cur
           .select(col("freq"), explode(zip_with(

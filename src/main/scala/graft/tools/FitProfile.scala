@@ -5,15 +5,13 @@ import org.apache.spark.sql.SparkSession
   * SparkEntry queries (default: q_fit_tree) with one warmup pass and
   * two timed passes — the same steady-state protocol as [[Bench]],
   * without paying for the full suite while iterating on one operator.
-  * Pass `--levels` to also enable the engine's per-level/phase
-  * wall-clock diagnostics (sets -Dgraft.fit.profile=1 — the fit,
-  * fused-crossval, and BPE loops print per-level timings). */
+  * Per-level cost is in the Spark job descriptions the fit loop sets
+  * (`"<family> level=<n> …"`). */
 object FitProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    if (args.contains("--levels")) sys.props("graft.fit.profile") = "1"
-    val names = args.filterNot(_ == "--levels").toSeq match {
+    val names = args.toSeq match {
       case Seq() => Seq("q_fit_tree")
       case some => some
     }

@@ -57,6 +57,29 @@ object SessionBridge {
     c
   }
 
+  /** A session for an iterative loop at `loopWidth` shuffle partitions
+    * (clamped to at least 1): a clone of `sess` at that width when it is
+    * below `sess`'s own width — a non-numeric width conf ("auto") counts
+    * as 200 — else `sess` itself, untouched. Frames enter the loop
+    * through [[Loop.inLoop]] and its result leaves through [[Loop.out]],
+    * re-rooted back into `sess`; both are identities without a clone. */
+  def loopSession(sess: org.apache.spark.sql.SparkSession, loopWidth: Long): Loop = {
+    val sessSp = math.max(1L,
+      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
+        .getOrElse(200L))
+    val loopSp = math.max(1L, math.min(sessSp, loopWidth))
+    if (loopSp >= sessSp) Loop(sess, df => df, df => df)
+    else {
+      val c = cloneWithConf(sess, "spark.sql.shuffle.partitions" -> loopSp.toString)
+      Loop(c, reRoot(_, c), reRoot(_, sess))
+    }
+  }
+
+  /** An iterative loop's session (see [[loopSession]]). */
+  case class Loop(session: org.apache.spark.sql.SparkSession,
+                  inLoop: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+                  out: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+
   /** Rebind `df`'s logical plan to session `to` — planning (and conf
     * reads) then happen under `to`'s SQLConf. The plan itself is
     * session-agnostic; cached/checkpointed inputs resolve through the
